@@ -107,13 +107,15 @@ object Bench {
     val total = results.collect { case (_, ts, true) => ts.min }.sum
     // north-star visibility (r12): the FineWeb recipe's PER-STAGE wall
     // times ride along once per sweep, so a regression in one stage
-    // shows by name instead of hiding in the recipe's aggregate
+    // shows by name instead of hiding in the recipe's aggregate. They
+    // come from the CURATE audit: one action per stage, each over the
+    // previous stage's checkpoint
     val fwStages: Option[String] =
       if (results.exists { case (k, _, ok) => k == "q_curate_fineweb" && ok })
         try {
           sweepCaches()
-          val ts = graft.queries.QueriesData.fineWebStageTimings(spark, sfDir)
-          Some(ts.map { case (k, v) =>
+          val ts = graft.queries.QueriesData.fineWebStageTimings(spark, sfDir, "v1")
+          Some(ts.drop(1).map { case (_, k, _, v) =>
             "\"" + k + "\":" + (math.round(v * 1000) / 1000.0)
           }.mkString("{", ",", "}"))
         } catch { case e: Throwable =>

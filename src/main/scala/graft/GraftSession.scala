@@ -37,9 +37,18 @@ object GraftSession {
     // mapping mode `id`); plain scans are unaffected
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    functions.GraftFunctions.registerAll(spark)
+    // once per session: every re-registration replaces each function
+    // and logs a WARN for it. A session conf marker, not "skip names
+    // that exist", so graft still overrides a Spark built-in of the
+    // same name.
+    if (!spark.conf.getOption(FunctionsKey).contains("true")) {
+      functions.GraftFunctions.registerAll(spark)
+      spark.conf.set(FunctionsKey, "true")
+    }
     spark
   }
+
+  private val FunctionsKey = "graft.functions.registered"
 
   /** Standalone builder (local mode for tests; on a cluster the master /
     * memory knobs come from spark-submit, not from here). */

@@ -114,8 +114,10 @@ class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     val d = definition(name).filter(_.kind == "external").getOrElse(
       throw new IllegalArgumentException(s"$name is not an external table"))
     val files = graft.sources.FileCollection.expandGlobs(spark, d.paths)
-    val stats = graft.stats.FileStats.collect(
-      spark, d.format.getOrElse("parquet"), files, d.options)
+    // stat the super-typed frame the table itself reads: a plain load
+    // takes one file's schema and fails on a collection of two
+    val stats = graft.stats.FileStats.collectFrom(graft.sources.FileCollection.read(
+      spark, d.format.getOrElse("parquet"), files, d.options))
     graft.stats.FileStats.write(stats, statsDir(name))
     files.length.toLong
   }

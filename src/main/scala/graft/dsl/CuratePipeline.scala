@@ -99,98 +99,100 @@ object CuratePipeline {
   import JsonQuery.DslException
 
   def compile(df: DataFrame, json: String,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val stages = JsonMethods.parse(json) \ "stages" match {
-      case JArray(xs) => xs
-      case _ => throw new DslException("curate body must have a 'stages' array")
-    }
-    // r17: fan the SEED out once when it arrives under-split (one
-    // file / one row group — the gate corpus shape) AND the pipeline
-    // opens with a CPU-bound row-kernel stage (url hygiene, HTML
-    // extraction, media decode): those fronts otherwise run on the
-    // scan's 1-2 splits while the machine idles. Model-first pipelines
-    // skip it — their cost is shuffles and broadcast rounds, where the
-    // extra exchange measured as a net loss. No-op at scale (Par.widen
-    // derives the decision from input size) and for non-file seeds.
-    val seed =
-      if (stages.headOption.map(opOf).exists(mapKernelOps))
-        graft.operators.Par.widen(df)
-      else df
-    stages.foldLeft(seed) { (cur, st) =>
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    run(df, json, textCol, idCol) { (in, op, materialize) =>
       // stage-boundary materialization: model-based and multi-consumer
       // stages read their input several times (an LM trains on it,
       // scores it, and the verdict semi-joins back); checkpointing the
       // input truncates the re-computation of everything upstream —
       // the production stance of writing intermediates between
       // pipeline phases. Opt-out with {"materialize": false}.
-      val in =
-        if (bool(st, "materialize", default = materializeByDefault(st))) {
-          val sc = cur.sparkSession.sparkContext
-          graft.operators.Par.withJobDescription(sc,
-            s"curate: ${opOf(st)} input checkpoint") {
-            // lazy: the stage's FIRST consumer materializes the rows in
-            // the same pass instead of a dedicated checkpoint job —
-            // same reuse, one fewer full-corpus pass per stage (r18)
-            graft.operators.Materialize.checkpoint(cur, eager = false)
-          }
-        } else cur
-      applyStage(in, st, textCol, idCol)
+      if (materialize.getOrElse(materializeByDefault(op)))
+        graft.operators.Par.withJobDescription(in.sparkSession.sparkContext,
+          s"curate: $op input checkpoint") {
+          // lazy: the stage's FIRST consumer materializes the rows in
+          // the same pass instead of a dedicated checkpoint job —
+          // same reuse, one fewer full-corpus pass per stage (r18)
+          graft.operators.Materialize.checkpoint(in, eager = false)
+        }
+      else in
     }
-  }
 
-  /** Per-stage audit: run the pipeline stage by stage and report each
-    * stage's surviving row count — the "what did each stage drop"
-    * table every production curation run records. STATEFUL stage
-    * outputs are checkpointed (read twice: counted AND fed forward);
-    * map-only stages are counted off the last checkpoint without one
-    * (re-running a fused projection is cheaper than materializing it),
-    * and a stage's explicit `"materialize": false` is honored like
-    * [[compile]]. Retention note: local checkpoints accumulate for
-    * the session (Spark offers no safe mid-plan release) at
-    * MEMORY_AND_DISK — one surviving-corpus copy per STATEFUL stage,
-    * spilling to disk; audit very long chains in sections if that
-    * bounds matter. Returns (stage, op, rows_out), stage 0 = input. */
+  /** Per-stage audit: the survivors of every stage — the "what did
+    * each stage drop" table every production curation run records —
+    * from [[compile]]'s stage loop with an eager boundary. Every
+    * stage's output (the input too) is checkpointed once and counted,
+    * so each stage runs exactly once, on its own action, over the
+    * materialized output of the stage before it. A stage's explicit
+    * `"materialize": false` leaves its input uncheckpointed, as in
+    * [[compile]]: that input is counted, then recomputed by the stage.
+    * The counts are actions, not a `Dataset.observe`: an `Observation`
+    * read after a lazy checkpoint reported 0 rows for a filter that
+    * kept 50,000. Retention note: local checkpoints accumulate for the
+    * session (Spark offers no safe mid-plan release) at
+    * MEMORY_AND_DISK — one surviving-corpus copy per stage, spilling
+    * to disk; audit very long chains in sections if that bounds
+    * matter. Returns (stage, op, rows_out), stage 0 = input. */
   def report(df: DataFrame, json: String,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    audit(df, json, textCol, idCol).map { case (k, op, n, _) => (k, op, n) }
+      .toDF("stage", "op", "rows_out")
+  }
+
+  /** [[report]] with each row's `seconds`: the wall time of the action
+    * that materialized and counted that stage's output. */
+  private[graft] def audit(df: DataFrame, json: String,
+      textCol: String = "text", idCol: String = "doc_id"): Seq[(Int, String, Long, Double)] = {
+    val sc = df.sparkSession.sparkContext
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long, Double)]
+    var producer = "input" // the stage whose output reaches the boundary
+    def count(out: DataFrame, keep: Boolean): DataFrame =
+      graft.operators.Par.withJobDescription(sc, s"curate audit: $producer") {
+        val t0 = System.nanoTime()
+        val kept = if (keep) graft.operators.Materialize.checkpoint(out) else out
+        rows += ((rows.size, producer, kept.count(), (System.nanoTime() - t0) / 1e9))
+        kept
+      }
+    val last = run(df, json, textCol, idCol) { (in, op, materialize) =>
+      val kept = count(in, materialize.getOrElse(true))
+      producer = op
+      kept
+    }
+    count(last, keep = true)
+    rows.toSeq
+  }
+
+  /** The one loop over a CURATE body's `stages`: per stage, read its
+    * op and explicit `"materialize"`, pass its input through the
+    * caller's `boundary` policy, then apply the stage. */
+  private def run(df: DataFrame, json: String, textCol: String, idCol: String)(
+      boundary: (DataFrame, String, Option[Boolean]) => DataFrame): DataFrame = {
     val stages = JsonMethods.parse(json) \ "stages" match {
       case JArray(xs) => xs
       case _ => throw new DslException("curate body must have a 'stages' array")
     }
-    val mapOnly = Set("url_filter", "html_extract", "normalize", "c4_clean",
-      "gopher_filter", "pii_redact", "stratified_sample", "image_hash",
-      "audio_hash", "embed_text", "sign_hash")
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-    val seed =
-      if (stages.headOption.map(opOf).exists(mapKernelOps))
-        graft.operators.Par.widen(df)
-      else df
-    val in0 = graft.operators.Materialize.checkpoint(seed)
-    rows += ((0, "input", in0.count()))
-    stages.foldLeft(in0) { (cur, st) =>
+    stages.zipWithIndex.foldLeft(df) { case (cur, (st, k)) =>
       val op = st \ "op" match {
         case JString(s) => s
         case _ => throw new DslException(s"stage missing string 'op': $st")
       }
-      val staged = applyStage(cur, st, textCol, idCol)
-      val out =
-        if (bool(st, "materialize", default = !mapOnly(op)))
-          graft.operators.Materialize.checkpoint(staged)
-        else staged
-      rows += ((rows.size, op, out.count()))
-      out
+      // r17: fan the SEED out once when it arrives under-split (one
+      // file / one row group — the gate corpus shape) AND the pipeline
+      // opens with a CPU-bound row-kernel stage (url hygiene, HTML
+      // extraction, media decode): those fronts otherwise run on the
+      // scan's 1-2 splits while the machine idles. Model-first pipelines
+      // skip it — their cost is shuffles and broadcast rounds, where the
+      // extra exchange measured as a net loss. No-op at scale (Par.widen
+      // derives the decision from input size) and for non-file seeds.
+      val in = if (k == 0 && mapKernelOps(op)) graft.operators.Par.widen(cur) else cur
+      applyStage(boundary(in, op, boolOpt(st, "materialize")), op, st, textCol, idCol)
     }
-    rows.toSeq.toDF("stage", "op", "rows_out")
-  }
-
-  private def opOf(st: JValue): String = st \ "op" match {
-    case JString(s) => s
-    case _ => "?"
   }
 
   /** first-stage ops whose per-row kernel cost justifies the seed
-    * fan-out (see compile) — the TEXT-extraction fronts, where the
+    * fan-out (see run) — the TEXT-extraction fronts, where the
     * win was measured; media/embedding fronts (image_hash, embed_text,
     * …) benched net-negative under the same treatment (their pipelines
     * are bounded by the near-dup join rounds, not the map kernel) */
@@ -198,22 +200,14 @@ object CuratePipeline {
     "c4_clean", "gopher_filter", "pii_redact")
 
   /** stages whose operators consume their input more than once */
-  private def materializeByDefault(st: JValue): Boolean =
-    (st \ "op") match {
-      case JString(op) => Set("lm_quality_filter", "perplexity_filter",
-        "dsir_filter", "minhash_neardup", "decontaminate",
-        "dedup_substrings", "tokenize", "nb_class_filter",
-        "perceptron_filter", "repetition_filter", "token_budget",
-        "semdedup", "hash_neardup", "quantile_filter")(op)
-      case _ => false
-    }
+  private val materializeByDefault = Set("lm_quality_filter", "perplexity_filter",
+    "dsir_filter", "minhash_neardup", "decontaminate",
+    "dedup_substrings", "tokenize", "nb_class_filter",
+    "perceptron_filter", "repetition_filter", "token_budget",
+    "semdedup", "hash_neardup", "quantile_filter")
 
-  private def applyStage(df: DataFrame, st: JValue,
+  private def applyStage(df: DataFrame, op: String, st: JValue,
       textCol: String, idCol: String): DataFrame = {
-    val op = st \ "op" match {
-      case JString(s) => s
-      case _ => throw new DslException(s"stage missing string 'op': $st")
-    }
     op match {
       case "url_filter" =>
         // crawl-frontier hygiene AHEAD of the html_extract front door:
@@ -951,9 +945,12 @@ object CuratePipeline {
     }
 
   private def bool(st: JValue, field: String, default: Boolean): Boolean =
+    boolOpt(st, field).getOrElse(default)
+
+  private def boolOpt(st: JValue, field: String): Option[Boolean] =
     st \ field match {
-      case JBool(b) => b
-      case JNothing => default
+      case JBool(b) => Some(b)
+      case JNothing => None
       case other => throw new DslException(s"'$field' must be a boolean, got $other")
     }
 

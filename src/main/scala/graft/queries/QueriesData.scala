@@ -3148,7 +3148,7 @@ object QueriesData {
   /** the FineWeb-recipe seed: sentence structure + a non-sentence
     * boilerplate line + %13 exact dupes + %17 near-dupes + %97
     * benchmark split — shared by the gate and its report twin */
-  private def fineWebSeed(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def fineWebSeed(s: SparkSession, dir: String): DataFrame = {
     val boiler = array(FwBoiler.map(lit): _*)
     Tables.load(s, dir, "documents").select(
       col("doc_id"), col("lang"), col("source"),
@@ -3176,7 +3176,7 @@ object QueriesData {
     "Please share this article with all of your friends online.",
     "This content is provided for informational purposes only to readers.")
 
-  private val fineWebSpec = """{"stages": [
+  private[graft] val fineWebSpec = """{"stages": [
     {"op": "c4_clean", "require_pass": false},
     {"op": "normalize"},
     {"op": "gopher_filter", "min_words": 25},
@@ -3227,29 +3227,17 @@ object QueriesData {
     """{"stages": [{"op": "url_filter", "block_hosts": ["ads.example.com"]},""" +
       fineWebSpecV2.drop("""{"stages": [""".length)
 
-  /** Per-stage wall timings of the FineWeb recipe for [[graft.Bench]]
-    * (the north-star path must regress visibly per-stage, not only via
-    * the aggregate). r16: each stage is timed on ITS OWN ACTION — the
-    * previous stages' output is materialized to parquet once, then the
-    * single stage runs over that input through the noop sink (min of
-    * 2 runs, warmup absorbed per stage). The r13 prefix-delta scheme
-    * systematically read 0.0 for late stages: cumulative-prefix mins
-    * clamp any stage whose (k+1)-prefix min happens to beat the
-    * k-prefix min — the `pack` stage reported 0.0 for two straight
-    * rounds. Per-stage actions cannot cancel each other. */
-  private[graft] def fineWebStageTimings(s: SparkSession,
-      dir: String): Seq[(String, Double)] =
-    fineWebStageTimings(s, dir, "v1")
-
-  /** [[fineWebStageTimings]] over a recipe VARIANT (r17: the curate
-    * drift watch profiles v2/v3 per-stage, not only v1 — same
-    * stage-owns-its-action scheme, the variant picks seed + spec; v3
-    * profiles the post-WARC pipeline over the crawl-shaped seed). */
+  /** The FineWeb recipe VARIANT's per-stage audit for [[graft.Bench]]
+    * and [[graft.tools.StageProfile]]: (stage, op, rows_out, seconds)
+    * from [[graft.dsl.CuratePipeline.audit]], so the north-star path
+    * regresses visibly per stage, not only via the aggregate. Each
+    * stage is timed on ITS OWN ACTION (materializing and counting its
+    * output over the previous stage's checkpoint), so one stage's time
+    * cannot hide in another's. The variant picks seed + spec: v2 puts
+    * html_extract in front, v3 url_filter ahead of v2. */
   private[graft] def fineWebStageTimings(s: SparkSession, dir: String,
-      variant: String): Seq[(String, Double)] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val (seed0, spec0) = variant match {
+      variant: String): Seq[(Int, String, Long, Double)] = {
+    val (seed, spec) = variant match {
       case "v1" => (fineWebSeed(s, dir), fineWebSpec)
       case "v2" => (fineWebHtmlSeed(s, dir), fineWebSpecV2)
       case "v3" =>
@@ -3268,40 +3256,7 @@ object QueriesData {
       case other => throw new IllegalArgumentException(
         s"unknown fineweb variant '$other' (v1|v2|v3)")
     }
-    val stages = (JsonMethods.parse(spec0) \ "stages") match {
-      case JArray(xs) => xs
-      case other => throw new IllegalStateException(s"bad fineWebSpec: $other")
-    }
-    val work = java.nio.file.Files.createTempDirectory("fwstages")
-    var cur: DataFrame = seed0
-    val out = stages.zipWithIndex.map { case (st, i) =>
-      val op = (st \ "op") match {
-        case JString(o) => o
-        case other => throw new IllegalStateException(s"stage without op: $other")
-      }
-      val spec = JsonMethods.compact(JObject("stages" -> JArray(List(st))))
-      val t = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        graft.dsl.CuratePipeline.compile(cur, spec)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      // materialize this stage's output as the next stage's input
-      if (i < stages.length - 1) {
-        val p = work.resolve(s"stage_$i").toString
-        graft.dsl.CuratePipeline.compile(cur, spec)
-          .write.mode("overwrite").parquet(p)
-        cur = s.read.parquet(p)
-      }
-      (op, t)
-    }
-    // the staged intermediates are a full corpus copy per stage —
-    // remove them rather than leaking /tmp on every bench run
-    try java.nio.file.Files.walk(work)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    catch { case _: Throwable => () }
-    out
+    graft.dsl.CuratePipeline.audit(seed, spec)
   }
 
   /** the 11 post-seed stage CTEs, over whatever `seedCte` defines as

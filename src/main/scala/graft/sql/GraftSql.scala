@@ -143,26 +143,17 @@ object GraftSql {
     * bytes, spill, time), read AFTER the run so every value is final —
     * the per-node half of the reference's `query_metrics` surface. */
   private def explainAnalyze(spark: SparkSession, inner: String): DataFrame = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import spark.implicits._
     val df = sql(spark, inner)
     // run the df's OWN QueryExecution (a sink write would plan a fresh
     // one and leave these nodes' metrics at zero); foreach on the
     // InternalRow RDD drains every partition executor-side
     df.queryExecution.toRdd.foreach(_ => ())
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String, String)]
-    def walk(p: SparkPlan, depth: Int): Unit = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth) // final AQE plan
-      case q: QueryStageExec => walk(q.plan, depth)
-      case _ =>
-        val metrics = p.metrics.toSeq.sortBy(_._1)
-          .map { case (k, m) => s"$k=${m.value}" }.mkString(", ")
-        out += ((out.size, depth, p.nodeName, metrics))
-        p.children.foreach(walk(_, depth + 1))
-    }
-    walk(df.queryExecution.executedPlan, 0)
-    out.toSeq.toDF("node_id", "depth", "node", "metrics")
+    QueryMetrics.planNodes(df.queryExecution.executedPlan).zipWithIndex.map {
+      case ((p, depth), id) =>
+        (id, depth, p.nodeName, p.metrics.toSeq.sortBy(_._1)
+          .map { case (k, m) => s"$k=${m.value}" }.mkString(", "))
+    }.toDF("node_id", "depth", "node", "metrics")
   }
 
   /** Split at top-level `UNION ALL BY NAME` boundaries (outside quotes and

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -55,9 +56,13 @@ object QueryMetrics {
     val remote = graft.sources.io.ByteStore.hasScheme(warehouse)
     val dir = Paths.get(warehouse, SubDir) // only dereferenced when local
     if (!remote) Files.createDirectories(dir)
-    val resultRows = qe.executedPlan.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
+    val nodes = planNodes(qe.executedPlan).map(_._1)
+    // the topmost node that counts rows: the root is often a codegen or
+    // AQE wrapper without a row count
+    val resultRows = nodes.iterator.flatMap(_.metrics.get("numOutputRows"))
+      .nextOption().map(_.value).getOrElse(-1L)
     val nodeMetrics = JObject(
-      qe.executedPlan.collect {
+      nodes.collect {
         case p if p.metrics.nonEmpty =>
           p.nodeName -> (JObject(p.metrics.toList.sortBy(_._1).map {
             case (k, m) => k -> (JLong(m.value): JValue)
@@ -90,6 +95,18 @@ object QueryMetrics {
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       }
     }
+  }
+
+  /** Every node of an executed plan in pre-order, with its depth, read
+    * through AQE: an [[AdaptiveSparkPlanExec]] is a leaf wrapping the
+    * final plan, and each query stage wraps the plan that ran. */
+  private[graft] def planNodes(plan: SparkPlan): Seq[(SparkPlan, Int)] = {
+    def walk(p: SparkPlan, depth: Int): Seq[(SparkPlan, Int)] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth)
+      case q: QueryStageExec => walk(q.plan, depth)
+      case _ => (p, depth) +: p.children.flatMap(walk(_, depth + 1))
+    }
+    walk(plan, 0)
   }
 
   private val appendLock = new Object

@@ -68,9 +68,11 @@ object QueryProfile {
       graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      val recs = jobs.toSeq.sortBy(_._1)
+      // a job whose end was not delivered has no duration: count it as
+      // incomplete and keep it out of jobSum
+      val (recs, incomplete) = jobs.toSeq.sortBy(_._1).partition(_._2.end > 0L)
       val jobSum = recs.map { case (_, r) => (r.end - r.start) / 1e3 }.sum
-      println(f"===== $name%s wall=$wall%.3f s jobs=${recs.size}%d jobSum=$jobSum%.3f s (gap=${wall - jobSum}%.3f s driver/planning)")
+      println(f"===== $name%s wall=$wall%.3f s jobs=${recs.size + incomplete.size}%d incomplete=${incomplete.size}%d jobSum=$jobSum%.3f s (gap=${wall - jobSum}%.3f s driver/planning)")
       recs.foreach { case (id, r) =>
         val dur = (r.end - r.start) / 1e3
         if (dur >= 0.02)

@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   * quartet drift watch — when the v2/v3 aggregates move round-over-
   * round with unchanged plans, this prints where, stage by stage,
   * instead of leaving "composition drift" as a guess). Reuses the
-  * Bench instrument ([[graft.queries.QueriesData.fineWebStageTimings]]:
-  * each stage timed on ITS OWN action over the materialized previous
-  * output, min of 2 runs).
+  * Bench instrument ([[graft.queries.QueriesData.fineWebStageTimings]],
+  * the CURATE audit: each stage timed once, on ITS OWN action that
+  * materializes its output over the previous stage's checkpoint).
   *
   * Usage: runMain graft.tools.StageProfile <sfDir> <v1|v2|v3>
   * Prints one JSON line: {"variant":"v2","stages":{...},"total":N}.
@@ -28,6 +28,7 @@ object StageProfile {
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftSession.configure(spark)
     val ts = graft.queries.QueriesData.fineWebStageTimings(spark, dir, variant)
+      .drop(1).map { case (_, op, _, t) => (op, t) } // stage 0 is the input
     val body = ts.map { case (op, t) =>
       "\"" + op + "\":" + f"$t%.3f"
     }.mkString(",")

@@ -92,6 +92,17 @@ class CatalogSpec extends AnyFunSuite {
     assert(rows.exists(_.getAs[String]("action") == "collect"))
     assert(rows.forall(_.getAs[Long]("execution_time_ms") >= -1))
     assert(rows.exists(_.getAs[String]("node_metrics").contains("numOutputRows")))
+    // an aggregate's own row carries its result size and per-node
+    // metrics from the final AQE plan
+    assert(engine.sql("SELECT n_regionkey AS metrics_probe, count(*) AS n FROM ext_nation " +
+      "GROUP BY n_regionkey").collect().length == 5)
+    def probe() = engine.sql("SHOW QUERY METRICS").collect()
+      .find(_.getAs[String]("query").contains("metrics_probe"))
+    val probeDeadline = System.currentTimeMillis() + 30000
+    while (probe().isEmpty && System.currentTimeMillis() < probeDeadline) Thread.sleep(100)
+    val agg = probe().getOrElse(fail("the aggregate's action was not recorded"))
+    assert(agg.getAs[Long]("result_rows") == 5)
+    assert(agg.getAs[String]("node_metrics") != "{}")
     // rows are files under the warehouse → a fresh engine still sees them
     val engine2 = new GraftEngine2Probe(spark, wh)
     assert(engine2.showMetrics().count() >= rows.length.toLong)
@@ -244,11 +255,14 @@ class CatalogSpec extends AnyFunSuite {
       (i * 100 until (i + 1) * 100).map(k => (k.toLong, s"v$k")).toDF("k", "v")
         .coalesce(1).write.parquet(s"$dir/part$i")
     }
+    // a fifth file widens k to double: the collection has two schemas
+    (400 until 500).map(k => (k.toDouble, s"v$k")).toDF("k", "v")
+      .coalesce(1).write.parquet(s"$dir/part4")
     engine.sql(s"CREATE EXTERNAL TABLE stats_t STORED AS parquet LOCATION '$dir/part*/*.parquet'")
     val st = engine.sql("ANALYZE FILES FOR stats_t").collect()(0).getString(0)
-    assert(st.contains("analyzed 4 files"))
+    assert(st.contains("analyzed 5 files"))
     val reg = engine.sql("SHOW FILE STATISTICS FOR stats_t")
-    assert(reg.count() == 8) // 4 files × 2 columns
+    assert(reg.count() == 10) // 5 files × 2 columns
     // a selective DSL query must open only the one matching file
     val statsDir = engine.catalog.statsDir("stats_t")
     val q = s"""{"select": ["k", "v"],

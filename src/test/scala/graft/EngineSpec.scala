@@ -774,4 +774,17 @@ class EngineSpec extends AnyFunSuite {
     s2.conf.unset("spark.sql.parser.escapedStringLiterals")
     s3.conf.unset("spark.sql.ansi.doubleQuotedIdentifiers")
   }
+
+  test("GraftSession.configure registers the graft functions once per session") {
+    // each registration stores a fresh ExpressionInfo with the builder
+    // (the builder itself is a non-capturing lambda, one instance for
+    // the JVM), so the info's identity tells whether it was replaced
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("st_x")
+    val before = registry.lookupFunction(id)
+    assert(before.nonEmpty)
+    GraftSession.configure(spark)
+    assert(registry.lookupFunction(id).exists(_ eq before.get),
+      "a second configure must not re-register the functions")
+  }
 }

@@ -2049,6 +2049,35 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
+  test("curate report: row k equals compile over the first k stages (sf0.01)") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val sf01 = sf.replace("sf0.001", "sf0.01")
+    def stagesOf(spec: String) = (JsonMethods.parse(spec) \ "stages").children
+    def check(seed: org.apache.spark.sql.DataFrame, spec: String): Unit = {
+      val rows = graft.dsl.CuratePipeline.report(seed, spec).orderBy("stage").collect()
+      assert(rows.map(_.getInt(0)).toSeq == (0 to stagesOf(spec).length))
+      rows.foreach { r =>
+        val k = r.getInt(0)
+        val prefix = JsonMethods.compact(JsonMethods.render(
+          JObject("stages" -> JArray(stagesOf(spec).take(k)))))
+        assert(r.getLong(2) == graft.dsl.CuratePipeline.compile(seed, prefix).count(),
+          s"stage $k (${r.getString(1)})")
+      }
+    }
+    // the q_curate_report chain, with one explicit "materialize": false
+    check(Tables.load(spark, sf01, "documents").select("doc_id", "source", "text"),
+      """{"stages": [
+        {"op": "c4_clean", "require_pass": false},
+        {"op": "normalize"},
+        {"op": "pii_redact"},
+        {"op": "dedup_exact", "materialize": false},
+        {"op": "cap_per_group", "group": "source", "salt": "cap-v1", "cap": 7}
+      ]}""")
+    check(graft.queries.QueriesData.fineWebSeed(spark, sf01),
+      graft.queries.QueriesData.fineWebSpec)
+  }
+
   // ------------------------------------------------------------- urls
 
   private def norm1(u: String): String = {

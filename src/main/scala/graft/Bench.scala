@@ -132,16 +132,20 @@ object Bench {
     // the driver's 8-core run clobbered bench_full_latest.json at 04:28)
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       s"bench_full_c$cpus.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] full-json write failed: ${e.getMessage}")
-    }
+    // the full record is the round's evidence: a failed write fails the bench
+    val fullWritten =
+      try { java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
+        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] full-json write failed: ${e.getMessage}")
+        false
+      }
     // silence the shutdown-path loggers (streaming StateStore maintenance
     // logs an ERROR stack during stop()) and print the contract line LAST:
     // the driver's tail capture must end with it, not with log noise
     spark.sparkContext.setLogLevel("OFF")
     spark.stop()
     println(line)
+    if (!fullWritten) sys.exit(1)
   }
 }

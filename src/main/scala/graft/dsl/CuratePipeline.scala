@@ -58,10 +58,12 @@ import graft.operators.{Dedup, Sampling, Sketches, TextOps}
   *    count, joined back by broadcast).
   *  - one shuffle + semi-join back: `repetition_filter` (per-doc
   *    scalars are map-only; the top-gram rank shuffles on (doc,
-  *    gram), bounded by tokens-per-doc), `token_budget` (one
-  *    prefix-sum window — shard-local with `shard`, the 100 TB
-  *    path), `hash_neardup` (banded 16-bit Hamming self-join, never
-  *    all-pairs, + min-label propagation).
+  *    gram), bounded by tokens-per-doc), `hash_neardup` (banded
+  *    16-bit Hamming self-join, never all-pairs, + min-label
+  *    propagation).
+  *  - distributed prefix scan + semi-join back: `token_budget` (one
+  *    range shuffle; per-partition sums broadcast back as offsets and
+  *    added map-side — shard-local with `shard`).
   *  - bounded multi-shuffle: `dedup_paragraphs` (digest keeper agg +
   *    join-back + per-doc reassembly), `lm_quality_filter` (tf
   *    pre-aggregate, vocab counts, score join — corpus-relative, so
@@ -85,8 +87,8 @@ import graft.operators.{Dedup, Sampling, Sketches, TextOps}
   * against a fixed merge table — inline or a merges.txt artifact via
   * `merges_path`; corpus-relative vocab, one bounded collect), and the
   * TERMINAL `pack` replaces documents with fixed-length sequences
-  * (one prefix-sum window — or shard-local with `shard` — plus the
-  * one seq_id shuffle).
+  * (the same distributed prefix scan — shard-local with `shard` —
+  * plus the one seq_id shuffle).
   * Stage order is the caller's policy — e.g. c4_clean before
   * normalize, because normalization collapses the newlines the line
   * rules read; dedup before sampling so survivors don't depend on
@@ -414,10 +416,10 @@ object CuratePipeline {
       case "token_budget" =>
         // reproducible ~budget-token subset (the data-mix sizing
         // step): rows order by the md5-bit contract on (id, salt) and
-        // keep while the exclusive whitespace-token prefix-sum stays
-        // under budget (overshoot ≤ 1 doc). `shard` makes the window
-        // shard-local — the 100 TB path: per-shard budgets, no global
-        // window.
+        // keep while the exclusive whitespace-token prefix sum stays
+        // under budget (overshoot ≤ 1 doc). The sum is a distributed
+        // scan either way; `shard` restarts it per shard, for
+        // per-shard budgets.
         val salt = str(st, "salt")
         val budget = lng(st, "budget")
         val shard = strOpt(st, "shard")

@@ -16,29 +16,28 @@ import org.apache.spark.sql.DataFrame
   *
   * `spark.graft.checkpoint.mode=reliable` flips EVERY such
   * materialization to a reliable `checkpoint()` written under
-  * `spark.graft.checkpoint.dir` (or the context's already-set
-  * checkpoint dir) — the production stance where intermediates must
-  * survive executor churn. One config, no call-site changes, identical
-  * results either way: a checkpoint only materializes rows, it never
-  * changes them.
+  * `spark.graft.checkpoint.dir` — the production stance where
+  * intermediates must survive executor churn. The dir is required:
+  * only the deployment knows a cluster-visible path, and a driver-local
+  * default would not be durable. One config, no call-site changes,
+  * identical results either way: a checkpoint only materializes rows,
+  * it never changes them.
   */
 object Materialize {
 
   /** `df` materialized with a cut lineage: `localCheckpoint(eager)` by
     * default, a reliable `checkpoint(eager)` when
-    * `spark.graft.checkpoint.mode=reliable`. */
+    * `spark.graft.checkpoint.mode=reliable`, which requires
+    * `spark.graft.checkpoint.dir`. */
   def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     spark.conf.get("spark.graft.checkpoint.mode", "local") match {
       case "reliable" =>
+        val dir = spark.conf.getOption("spark.graft.checkpoint.dir").getOrElse(
+          throw new IllegalArgumentException("spark.graft.checkpoint.mode=reliable " +
+            "needs spark.graft.checkpoint.dir, a cluster-visible path"))
         val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) {
-          // explicit dir wins; otherwise a per-context temp dir (tests /
-          // local runs) — a real deployment sets a cluster-visible path
-          val dir = spark.conf.get("spark.graft.checkpoint.dir",
-            java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-          sc.setCheckpointDir(dir)
-        }
+        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
         df.checkpoint(eager)
       case "local" => df.localCheckpoint(eager)
       case other => throw new IllegalArgumentException(

@@ -49,6 +49,14 @@ import graft.functions.TextExprs
   */
 object NgramLm {
 
+  /** Above this many rows in one language, the per-language
+    * `percent_rank` window of [[pplBuckets]] (and its quantile sketch)
+    * raises a named error instead of silently single-tasking that
+    * language. The guard is a `row_number` over the same window (one
+    * extra function in the same pass, no extra shuffle), so it costs
+    * nothing and fires at execution time with the actual row count. */
+  val MaxLangRows: Long = 10000000L
+
   /** pruned gram-count tables of one model; c3 is null for order 2 */
   private final case class Counts(
       c1: DataFrame, c2: DataFrame, c3: DataFrame, n: DataFrame)
@@ -215,10 +223,9 @@ object NgramLm {
     * whole contract replays bit-identically in SQL.
     *
     * `exact = true` restores percent_rank-within-language (ties broken
-    * by doc_id) — but behind the SAME loud guard the pack windows use
-    * ([[Sampling.GlobalWindowMaxRows]]): a language partition wider
-    * than `maxLangRows` raises a named error instead of silently
-    * single-tasking 40% of the corpus.
+    * by doc_id) — but behind a loud width guard ([[MaxLangRows]]): a
+    * language partition wider than `maxLangRows` raises a named error
+    * instead of silently single-tasking 40% of the corpus.
     *
     * Returns (doc_id, lang, n_tokens, ppl, bucket ∈ [0, buckets),
     * band ∈ {head, middle, tail}). */
@@ -228,7 +235,7 @@ object NgramLm {
       minCount: Long = 1, order: Int = 2,
       exact: Boolean = false, ratePerM: Int = 250000,
       salt: String = "ppl-band-v1",
-      maxLangRows: Long = Sampling.GlobalWindowMaxRows): DataFrame = {
+      maxLangRows: Long = MaxLangRows): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     require(ratePerM > 0 && ratePerM <= 1000000,
       s"pplBuckets: ratePerM must be in (0, 1000000], got $ratePerM")
@@ -242,7 +249,6 @@ object NgramLm {
         val w = Window.partitionBy(col(langCol))
           .orderBy(col("ppl"), col("doc_id"))
         // row_number over the same window = zero-cost width guard
-        // (the packSequences stance, Sampling.scala)
         p.withColumn("bucket",
           when(row_number().over(w) > maxLangRows,
             raise_error(lit(s"pplBuckets: language partition exceeds " +

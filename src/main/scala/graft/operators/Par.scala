@@ -52,9 +52,11 @@ object Par {
       try {
         val uri = new java.net.URI(f)
         if (uri.getScheme != null && uri.getScheme != "file") return df
-        // a legitimately 0-byte part file contributes nothing to the
-        // total but must not abort the widen for the whole frame
-        total += math.max(0L, new java.io.File(uri.getPath).length())
+        // a missing or unreadable file has no knowable size (File.length
+        // reads 0 for it); a legitimately 0-byte part file adds nothing
+        val file = new java.io.File(uri.getPath)
+        if (!file.isFile) return df
+        total += file.length()
       } catch { case scala.util.control.NonFatal(_) => return df }
       i += 1
     }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deterministic dataset splitting for training pipelines: the split a
   * row lands in is a pure function of (key, salt) — stable across runs,
@@ -41,51 +42,80 @@ object Sampling {
   def deterministicShuffle(df: DataFrame, keyCol: String, epoch: Int): DataFrame =
     df.orderBy(hashBucket(col(keyCol), s"epoch-$epoch", 1 << 30), col(keyCol))
 
-  /** Above this many rows, a GLOBAL (unsharded) prefix-sum window in
-    * [[packSequences]] / [[packTokenIds]] / [[tokenBudgetSample]]
-    * raises a named error instead of silently single-tasking the whole
-    * corpus — at 100 TB the shard column is the design, not an option.
-    * The guard is a `row_number` over the same window (one extra
-    * function in the same pass, no extra shuffle), so it costs nothing
-    * and fires at execution time with the actual row count. */
-  val GlobalWindowMaxRows: Long = 10000000L
-
-  /** value := expr, unless this is an UNSHARDED window whose row count
-    * exceeds the cap — then raise the named error */
-  private def shardGuarded(expr: Column, w: org.apache.spark.sql.expressions.WindowSpec,
-      sharded: Boolean, maxRows: Long, fn: String): Column =
-    if (sharded) expr
-    // branch types coerce: raise_error is NullType, the common type is
-    // expr's own — no explicit cast needed
-    else when(row_number().over(w) > maxRows,
-      raise_error(lit(s"$fn: global window exceeds $maxRows rows; " +
-        "pass shardCol to shard the window (the 100 TB path)"))).otherwise(expr)
+  /** `df` plus a long column `out`: the exact EXCLUSIVE prefix sum of
+    * `value` (NULL counts as 0) in `order`, restarting per `shardCol`
+    * when one is given — the one scan behind [[packSequences]],
+    * [[packTokenIds]] and [[tokenBudgetSample]]. Two passes over one
+    * range partitioning, no single-task step over the rows at any
+    * scale and no row cap:
+    *  1. rows range-partition on `shard ++ order` and sort within each
+    *     partition, fixed once behind a checkpoint (every plan over a
+    *     bare `repartitionByRange` samples its own bounds, so two reads
+    *     of it could disagree);
+    *  2. each run of one shard within a partition sums to one row;
+    *     those ≤ partitions + shards sums go to the driver, become
+    *     exclusive offsets per shard and broadcast back, and one
+    *     map-side pass adds each row's running sum within its run to
+    *     the run's offset.
+    * The result does not depend on the input's partitioning. `order`
+    * must be total: tied rows take an arbitrary order among
+    * themselves, as in any scan. */
+  private def withExclusivePrefixSum(df: DataFrame, value: Column,
+      order: Seq[Column], shardCol: Option[String], out: String): DataFrame = {
+    val keys = shardCol.map(col).toSeq ++ order
+    val ranged = Materialize.checkpoint(df.repartitionByRange(keys: _*)
+      .sortWithinPartitions(keys: _*)
+      .withColumn("__v", coalesce(value.cast("long"), lit(0L))), eager = false)
+    // a run: consecutive rows of one shard in a partition (NULL is a shard)
+    def sameShard(a: Any, b: Any): Boolean = java.util.Objects.deepEquals(a, b)
+    // pass 1, which also materializes `ranged`: (partition, shard, sum)
+    // of every run, in partition order — that is, in (shard, order) order
+    val runs = ranged.select(shardCol.fold(lit(null))(col), col("__v")).rdd
+      .mapPartitionsWithIndex { (p, rows) =>
+        val sums = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long)]
+        rows.foreach { r =>
+          if (sums.isEmpty || !sameShard(sums.last._2, r.get(0))) sums += ((p, r.get(0), 0L))
+          sums(sums.length - 1) = sums.last.copy(_3 = sums.last._3 + r.getLong(1))
+        }
+        sums.iterator
+      }.collect()
+    val offsets = new Array[Long](runs.length)
+    for (i <- 1 until runs.length) if (sameShard(runs(i - 1)._2, runs(i)._2))
+      offsets(i) = offsets(i - 1) + runs(i - 1)._3
+    val byPart = df.sparkSession.sparkContext.broadcast(
+      runs.map(_._1).zip(offsets).groupMap(_._1)(_._2))
+    // pass 2: a row's sum is its run's offset plus the run's rows before it
+    val (sIdx, vIdx) = (shardCol.map(ranged.schema.fieldIndex), ranged.schema.fieldIndex("__v"))
+    val scanned = ranged.rdd.mapPartitionsWithIndex { (p, rows) =>
+      var (run, shard, acc) = (-1, null: Any, 0L)
+      rows.map { r =>
+        val sh = sIdx.map(r.get).orNull
+        if (run < 0 || !sameShard(shard, sh)) { run += 1; shard = sh; acc = byPart.value(p)(run) }
+        acc += r.getLong(vIdx)
+        Row.fromSeq(r.toSeq :+ (acc - r.getLong(vIdx)))
+      }
+    }
+    df.sparkSession.createDataFrame(scanned, ranged.schema.add(out, LongType)).drop("__v")
+  }
 
   /** Sequence packing: assign rows to token-budgeted batches by a scan
     * over a deterministic order — batch_id = floor(exclusive running
     * token sum / budget), the standard parallel packing approximation
     * (a row straddling a boundary belongs to the batch where it
     * starts, so batches can overshoot by at most one row's tokens; the
-    * exact bin-packing variant is inherently sequential).
+    * exact bin-packing variant is inherently sequential). A row with a
+    * NULL token count gets a NULL batch_id.
     *
-    * `shardCol` is the 100 TB path: the window partitions by shard so
-    * every shard packs in parallel and batch_id is (shard-local);
-    * without it the cumsum is one global window — fine for a bounded
-    * frame, a single-task bottleneck at scale. */
+    * `shardCol` restarts the scan per shard, so batch_id is
+    * shard-local; sharded or not, the scan runs in parallel
+    * ([[withExclusivePrefixSum]]). */
   def packSequences(df: DataFrame, tokenCol: String, orderCol: String,
-      budget: Long, shardCol: Option[String] = None,
-      maxGlobalRows: Long = GlobalWindowMaxRows): DataFrame = {
+      budget: Long, shardCol: Option[String] = None): DataFrame = {
     require(budget > 0, "token budget must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val base = shardCol match {
-      case Some(sc) => Window.partitionBy(col(sc)).orderBy(col(orderCol))
-      case None => Window.orderBy(col(orderCol))
-    }
-    val w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inclusive = sum(col(tokenCol)).over(w)
-    df.withColumn("batch_id", shardGuarded(
-      floor((inclusive - col(tokenCol)) / lit(budget)).cast("long"),
-      base, shardCol.isDefined, maxGlobalRows, "packSequences"))
+    // `div` = exact integer division on the exact long sums
+    withExclusivePrefixSum(df, col(tokenCol), Seq(col(orderCol)), shardCol, "batch_id")
+      .withColumn("batch_id",
+        when(col(tokenCol).isNotNull, expr(s"batch_id div $budget")))
   }
 
   /** Pack per-document token-id ARRAYS into fixed-length training
@@ -95,25 +125,18 @@ object Sampling {
     * pretraining packing (the final sequence runs short; the trainer's
     * collator pads). Returns (seq_id, n_tokens, input_ids).
     *
-    * Scale: document offsets come from ONE exclusive prefix-sum window
-    * ([[packSequences]]'s stance — `shardCol` partitions it so shards
-    * pack in parallel with shard-local seq ids; without it the cumsum
-    * is a single global window, fine for a bounded frame), then the
-    * exploded id stream shuffles once on seq_id and each sequence
-    * reassembles via array_sort over (slot, id) structs — no
-    * collect_list ordering assumption. */
+    * Scale: document offsets are one exclusive prefix sum of the array
+    * sizes ([[withExclusivePrefixSum]] — `shardCol` restarts it per
+    * shard, for shard-local seq ids), then the exploded id stream
+    * shuffles once on seq_id and each sequence reassembles via
+    * array_sort over (slot, id) structs — no collect_list ordering
+    * assumption. */
   def packTokenIds(df: DataFrame, idsCol: String, orderCol: String,
       seqLen: Int, shardCol: Option[String] = None,
       eosId: Option[Long] = None,
-      maxGlobalRows: Long = GlobalWindowMaxRows,
       withSegments: Boolean = false): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
     import org.apache.spark.sql.expressions.Window
-    val base = shardCol match {
-      case Some(sc) => Window.partitionBy(col(sc)).orderBy(col(orderCol))
-      case None => Window.orderBy(col(orderCol))
-    }
-    val w = base.rowsBetween(Window.unboundedPreceding, -1)
     // a NULL id array must behave as empty: legacy sizeOfNull makes
     // size(null) = -1 (which would silently shift every later sequence
     // boundary) and concat(null, eos) stays null (dropping the
@@ -129,42 +152,37 @@ object Sampling {
         concat(col(idsCol), array(lit(e).cast("long"))))
       case None => nonNull
     }
-    // the document ordinal rides the SAME window as the offset cumsum —
-    // one shuffle serves both — and is carried through the explode ONLY
-    // when segment ids were asked for: 8 unused bytes per token through
-    // the pack shuffle is real money at corpus scale
-    val withOff0 = src
-      .withColumn("__off", shardGuarded(
-        coalesce(sum(size(col(idsCol)).cast("long")).over(w), lit(0L)),
-        base, shardCol.isDefined, maxGlobalRows, "packTokenIds"))
-    val withOff =
-      if (withSegments) withOff0.withColumn("__doc", row_number().over(base).cast("long"))
-      else withOff0
+    val withOff = withExclusivePrefixSum(src, size(col(idsCol)),
+      Seq(col(orderCol)), shardCol, "__off")
     val shardKeep = shardCol.map(col).toSeq
-    val docKeep = if (withSegments) Seq(col("__doc")) else Seq.empty
+    // the document offset rides through the explode ONLY when segment
+    // ids were asked for: 8 unused bytes per token through the pack
+    // shuffle is real money at corpus scale
     val exploded = withOff
-      .select(shardKeep ++ Seq(col("__off")) ++ docKeep ++ Seq(
+      .select(shardKeep ++ Seq(col("__off"),
         posexplode(col(idsCol)).as(Seq("__i", "__id"))): _*)
       // `div` = exact integer division (floor(a/b) on doubles would
       // drift past 2^53 global tokens — a real number at corpus scale)
       .selectExpr(shardCol.toSeq ++ Seq(
         s"CAST((__off + __i) div $seqLen AS BIGINT) AS seq_id",
         s"CAST((__off + __i) % $seqLen AS INT) AS __slot") ++
-        (if (withSegments) Seq("__doc") else Seq.empty) ++ Seq("__id"): _*)
+        (if (withSegments) Seq("__off") else Seq.empty) ++ Seq("__id"): _*)
     // SEGMENT IDS for block-diagonal attention masking: each token's
     // source-document ordinal WITHIN its sequence (1, 1, …, 2, 2, …) —
     // the standard companion array when packed sequences must not
-    // attend across document boundaries. dense_rank over the document
-    // ordinal, partitioned by the SAME key the pack groupBy shuffles
-    // on, so the window rides that exchange (one extra sort, no extra
-    // shuffle) and each token's id is O(1) — a per-sequence fold that
-    // re-concatenates the accumulator would be O(seqLen²) per sequence.
+    // attend across document boundaries. Within a shard, documents
+    // that contribute a token have strictly increasing offsets (empty
+    // ones explode to no rows), so dense_rank over the offset is the
+    // document ordinal; partitioned by the SAME key the pack groupBy
+    // shuffles on, the window rides that exchange (one extra sort, no
+    // extra shuffle) and each token's id is O(1) — a per-sequence fold
+    // that re-concatenates the accumulator would be O(seqLen²).
     val withSeg =
       if (!withSegments) exploded
       else exploded.withColumn("__seg",
         dense_rank().over(Window
           .partitionBy(shardKeep :+ col("seq_id"): _*)
-          .orderBy(col("__doc"))))
+          .orderBy(col("__off"))))
     val tokenStruct =
       if (withSegments) struct(col("__slot"), col("__id"), col("__seg"))
       else struct(col("__slot"), col("__id"))
@@ -186,24 +204,16 @@ object Sampling {
     * every run, decorrelated from ingest order), and a row is kept
     * while the EXCLUSIVE prefix sum of `tokenCol` stays under
     * `budget`, so the subset overshoots by at most one document. The
-    * hash ties on the raw key so the order is total. One prefix-sum
-    * window (the [[packSequences]] stance — `shardCol` makes it
-    * shard-local with a per-shard budget at 100 TB); emits
-    * (input row, keep) so callers can filter or audit. */
+    * hash ties on the raw key so the order is total. One exclusive
+    * prefix sum ([[withExclusivePrefixSum]] — `shardCol` makes it
+    * shard-local, with a per-shard budget); emits (input row, keep) so
+    * callers can filter or audit. */
   def tokenBudgetSample(df: DataFrame, tokenCol: String, keyCol: String,
-      salt: String, budget: Long, shardCol: Option[String] = None,
-      maxGlobalRows: Long = GlobalWindowMaxRows): DataFrame = {
+      salt: String, budget: Long, shardCol: Option[String] = None): DataFrame = {
     require(budget > 0, "token budget must be positive")
-    import org.apache.spark.sql.expressions.Window
     val h = hashBucket(col(keyCol), salt, buckets = 1 << 30)
-    val base = shardCol match {
-      case Some(sc) => Window.partitionBy(col(sc)).orderBy(h, col(keyCol))
-      case None => Window.orderBy(h, col(keyCol))
-    }
-    val w = base.rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("keep", shardGuarded(
-      coalesce(sum(col(tokenCol).cast("long")).over(w), lit(0L)) < budget,
-      base, shardCol.isDefined, maxGlobalRows, "tokenBudgetSample"))
+    withExclusivePrefixSum(df, col(tokenCol), Seq(h, col(keyCol)), shardCol, "keep")
+      .withColumn("keep", col("keep") < budget)
   }
 
   /** Adds a `split` column assigning each row to one named fraction

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1977,39 +1977,138 @@ class OperatorsSpec extends AnyFunSuite {
     assert(kept == Set(1L, 2L), s"3 sits at cos≈1 to 1 in the same cell: $kept")
   }
 
-  test("shard guard: global windows past the row cap fail with the named error (r12)") {
+  // ---- the window formulation the Sampling prefix sums replaced,
+  // kept as the reference: one window per shard, or one
+  // unpartitioned window, over the rows before each row in order
+  private def refWindow(shardCol: Option[String], order: Seq[Column]) = {
+    import org.apache.spark.sql.expressions.Window
+    shardCol match {
+      case Some(sc) => Window.partitionBy(col(sc)).orderBy(order: _*)
+      case None => Window.orderBy(order: _*)
+    }
+  }
+
+  private def refPackSequences(df: DataFrame, tokenCol: String,
+      orderCol: String, budget: Long, shardCol: Option[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = refWindow(shardCol, Seq(col(orderCol)))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.withColumn("batch_id",
+      floor((sum(col(tokenCol)).over(w) - col(tokenCol)) / lit(budget)).cast("long"))
+  }
+
+  private def refTokenBudget(df: DataFrame, tokenCol: String, keyCol: String,
+      salt: String, budget: Long, shardCol: Option[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val h = Sampling.hashBucket(col(keyCol), salt, buckets = 1 << 30)
+    val w = refWindow(shardCol, Seq(h, col(keyCol)))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    df.withColumn("keep",
+      coalesce(sum(col(tokenCol).cast("long")).over(w), lit(0L)) < budget)
+  }
+
+  private def refPackTokenIds(df: DataFrame, idsCol: String, orderCol: String,
+      seqLen: Int, shardCol: Option[String], eosId: Option[Long],
+      withSegments: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val base = refWindow(shardCol, Seq(col(orderCol)))
+    val w = base.rowsBetween(Window.unboundedPreceding, -1)
+    val nonNull = df.withColumn(idsCol,
+      coalesce(col(idsCol), array().cast(df.schema(idsCol).dataType)))
+    val src = eosId.fold(nonNull)(e => nonNull.withColumn(idsCol,
+      concat(col(idsCol), array(lit(e).cast("long")))))
+    val shardKeep = shardCol.map(col).toSeq
+    val packed = src
+      .withColumn("__off",
+        coalesce(sum(size(col(idsCol)).cast("long")).over(w), lit(0L)))
+      .withColumn("__doc", row_number().over(base).cast("long"))
+      .select(shardKeep ++ Seq(col("__off"), col("__doc"),
+        posexplode(col(idsCol)).as(Seq("__i", "__id"))): _*)
+      .selectExpr(shardCol.toSeq ++ Seq(
+        s"CAST((__off + __i) div $seqLen AS BIGINT) AS seq_id",
+        s"CAST((__off + __i) % $seqLen AS INT) AS __slot", "__doc", "__id"): _*)
+      .withColumn("__seg", dense_rank().over(Window
+        .partitionBy(shardKeep :+ col("seq_id"): _*).orderBy(col("__doc"))))
+      .groupBy(shardKeep :+ col("seq_id"): _*)
+      .agg(count(lit(1)).as("n_tokens"), array_sort(collect_list(
+        struct(col("__slot"), col("__id"), col("__seg")))).as("__structs"))
+      .withColumn("input_ids", transform(col("__structs"), s => s.getField("__id")))
+      .withColumn("segment_ids", transform(col("__structs"), s => s.getField("__seg")))
+      .drop("__structs")
+    if (withSegments) packed else packed.drop("segment_ids")
+  }
+
+  /** same columns, same rows (as a multiset) */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq, what)
+    val g = got.collect().map(_.toString).sorted.toSeq
+    val w = want.collect().map(_.toString).sorted.toSeq
+    assert(g == w, s"$what:\n  got=${g.take(5)}\n  want=${w.take(5)}")
+  }
+
+  test("prefix scan: the 200-row frame packs and budgets unsharded") {
     import spark.implicits._
-    import graft.operators.Sampling
     val df = (1 to 200).map(i => (i.toLong, 5L, Seq(1L, 2L), s"s${i % 4}"))
       .toDF("id", "n", "ids", "shard")
-    def msgOf(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
-    // under the cap the global window is allowed (bounded frames)
-    assert(Sampling.tokenBudgetSample(df, "n", "id", "v1", 100L, None,
-      maxGlobalRows = 500).count() == 200)
-    // over the cap, UNSHARDED: the named error points at the shard arg
-    val e1 = intercept[Exception] {
-      Sampling.tokenBudgetSample(df, "n", "id", "v1", 100L, None,
-        maxGlobalRows = 100).collect()
+    // unsharded and sharded alike: no row cap
+    for (shard <- Seq(Option.empty[String], Some("shard"))) {
+      assertSameRows(Sampling.tokenBudgetSample(df, "n", "id", "v1", 100L, shard),
+        refTokenBudget(df, "n", "id", "v1", 100L, shard), s"budget $shard")
+      assertSameRows(Sampling.packTokenIds(df, "ids", "id", 4, shard),
+        refPackTokenIds(df, "ids", "id", 4, shard, None, false), s"packTokenIds $shard")
+      assertSameRows(Sampling.packSequences(df, "n", "id", 50L, shard),
+        refPackSequences(df, "n", "id", 50L, shard), s"packSequences $shard")
     }
-    assert(msgOf(e1).contains("pass shardCol"), msgOf(e1))
-    // the SHARDED form at the same size sails through (the 100 TB path)
-    assert(Sampling.tokenBudgetSample(df, "n", "id", "v1", 100L, Some("shard"),
-      maxGlobalRows = 100).count() == 200)
-    // packTokenIds and packSequences guard identically, by name
-    val e2 = intercept[Exception] {
-      Sampling.packTokenIds(df, "ids", "id", 4, None, None,
-        maxGlobalRows = 100).collect()
+    // 100 tokens at 5 per row: the exclusive sum stays under for 20 rows
+    assert(Sampling.tokenBudgetSample(df, "n", "id", "v1", 100L)
+      .filter(col("keep")).count() == 20)
+  }
+
+  test("prefix scan: packing and token budgets equal the window formulation") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20261019L)
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("shard", StringType), StructField("n", LongType),
+      StructField("ids", ArrayType(LongType))))
+    // unique doc ids in shuffled ingest order; NULL shards, NULL token
+    // counts, NULL and empty id arrays
+    val rows = rnd.shuffle((0 until 60).toList).map { i =>
+      Row(i.toLong, if (i % 7 == 0) null else s"s${i % 3}",
+        if (i % 11 == 0) null else java.lang.Long.valueOf(rnd.nextInt(30).toLong),
+        if (i % 13 == 0) null
+        else Seq.fill(if (i % 5 == 0) 0 else 1 + rnd.nextInt(9))(rnd.nextInt(100).toLong))
     }
-    assert(msgOf(e2).contains("packTokenIds"), msgOf(e2))
-    val e3 = intercept[Exception] {
-      Sampling.packSequences(df, "n", "id", 50L, None,
-        maxGlobalRows = 100).collect()
+    // AQE folds these tiny range partitions into one; this session keeps
+    // five, so offsets cross partition boundaries
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    wide.conf.set("spark.sql.shuffle.partitions", "5")
+    val cases =
+      (for (s <- Seq(spark, wide); parts <- Seq(1, 3, 7)) yield (s, rows, parts)) ++
+      Seq((wide, Seq.empty[Row], 1), (wide, rows.take(1), 1))
+    for ((session, data, parts) <- cases; shard <- Seq(Option.empty[String], Some("shard"))) {
+      val df = session.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+        .repartition(parts)
+      val tag = s"rows=${data.size} parts=$parts shard=$shard wide=${session eq wide}"
+      assertSameRows(Sampling.packSequences(df, "n", "doc_id", 40L, shard),
+        refPackSequences(df, "n", "doc_id", 40L, shard), s"packSequences $tag")
+      assertSameRows(Sampling.tokenBudgetSample(df, "n", "doc_id", "scan-v1", 200L, shard),
+        refTokenBudget(df, "n", "doc_id", "scan-v1", 200L, shard), s"budget $tag")
+      for ((eos, segs) <- Seq((Option.empty[Long], false), (Some(-1L), true)))
+        assertSameRows(Sampling.packTokenIds(df, "ids", "doc_id", 7, shard, eos, segs),
+          refPackTokenIds(df, "ids", "doc_id", 7, shard, eos, segs),
+          s"packTokenIds eos=$eos segments=$segs $tag")
     }
-    assert(msgOf(e3).contains("packSequences"), msgOf(e3))
-    assert(Sampling.packSequences(df, "n", "id", 50L, Some("shard"),
-      maxGlobalRows = 100).count() == 200)
+    // tied order keys: only the order-free invariants hold
+    val tied = wide.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .withColumn("doc_id", col("doc_id") % 4).repartition(3)
+    val total = rows.map(r => Option(r.getSeq[Long](3)).map(_.size).getOrElse(0)).sum
+    val packed = Sampling.packTokenIds(tied, "ids", "doc_id", 7).collect()
+    assert(packed.map(_.getAs[Long]("n_tokens")).sum == total)
+    assert(packed.length == (total + 6) / 7)
+    assert(Sampling.packSequences(tied, "n", "doc_id", 40L).count() == rows.size)
+    assert(Sampling.tokenBudgetSample(tied, "n", "doc_id", "scan-v1", 200L).count() == rows.size)
   }
 
   test("embed_text: unit-norm, word-order invariant, salt/dim sensitive") {
@@ -3335,7 +3434,8 @@ class OperatorsSpec extends AnyFunSuite {
       (7L, "zq zq zq w w w"),
       (8L, null.asInstanceOf[String]),
       (9L, "aa bb aa bb cc aa bb"),
-      (10L, "solo")).toDF("doc_id", "text")
+      (10L, "solo"),
+      (11L, "a\u000Bb a\u000Bb c")).toDF("doc_id", "text")
     val fast = TextOps.repetitionProfile(docs, "text", "doc_id")
     // the pre-r18 formulation, verbatim
     val toks = filter(split(trim($"text"), "\\s+"), t => length(t) > 0)
@@ -3402,5 +3502,28 @@ class OperatorsSpec extends AnyFunSuite {
     val df3 = s3.createDataFrame(df.collectAsList(), df.schema)
     val e = intercept[IllegalArgumentException] { Materialize.checkpoint(df3) }
     assert(e.getMessage.contains("banana"))
+    // reliable with no dir is loud, even though the context above
+    // already holds a checkpoint dir: no driver-local fallback
+    val s4 = spark.newSession()
+    s4.conf.set("spark.graft.checkpoint.mode", "reliable")
+    val df4 = s4.createDataFrame(df.collectAsList(), df.schema)
+    val e4 = intercept[IllegalArgumentException] { Materialize.checkpoint(df4) }
+    assert(e4.getMessage.contains("spark.graft.checkpoint.dir"), e4.getMessage)
+  }
+
+  test("Par.widen leaves a frame with a missing input file unchanged") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-widen-missing")
+      .resolve("t").toString
+    (1 to 40).map(i => (i.toLong, s"r$i")).toDF("id", "s")
+      .repartition(4).write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    // a small file-backed frame on local[4] widens
+    assert(!(Par.widen(df) eq df))
+    val part = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).head
+    assert(part.delete())
+    // the deleted file has no knowable size, so no widen is decided
+    assert(Par.widen(df) eq df)
   }
 }

@@ -50,9 +50,18 @@ object GraftSession {
 
   private val FunctionsKey = "graft.functions.registered"
 
-  /** Standalone builder (local mode for tests; on a cluster the master /
-    * memory knobs come from spark-submit, not from here). */
-  def build(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
+  /** Cores of a standalone main's local session: `SPARK_GRAFT_CPUS`
+    * when set, else the host's cores, so no default oversubscribes. */
+  def localCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** Standalone builder (local mode for the mains and tests; on a
+    * cluster the master / memory knobs come from spark-submit, not from
+    * here). Reliable checkpoints of a frame that is gone are deleted
+    * (`cleanCheckpoints`, read only when the context is created), so
+    * per-round files of the iterative operators do not pile up. */
+  def build(master: String = s"local[$localCores]",
+      shufflePartitions: Int = localCores): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -62,6 +71,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     configure(spark)

@@ -102,39 +102,32 @@ object CuratePipeline {
 
   def compile(df: DataFrame, json: String,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    run(df, json, textCol, idCol) { (in, op, materialize) =>
+    run(df, json, textCol, idCol) { (in, op) =>
       // stage-boundary materialization: model-based and multi-consumer
       // stages read their input several times (an LM trains on it,
       // scores it, and the verdict semi-joins back); checkpointing the
       // input truncates the re-computation of everything upstream —
       // the production stance of writing intermediates between
-      // pipeline phases. Opt-out with {"materialize": false}.
-      if (materialize.getOrElse(materializeByDefault(op)))
+      // pipeline phases. The checkpoint is a job of its own, run here
+      // under the stage's label.
+      if (materializeInput(op))
         graft.operators.Par.withJobDescription(in.sparkSession.sparkContext,
-          s"curate: $op input checkpoint") {
-          // lazy: the stage's FIRST consumer materializes the rows in
-          // the same pass instead of a dedicated checkpoint job —
-          // same reuse, one fewer full-corpus pass per stage (r18)
-          graft.operators.Materialize.checkpoint(in, eager = false)
-        }
+          s"curate: $op input checkpoint")(graft.operators.Materialize.checkpoint(in))
       else in
     }
 
   /** Per-stage audit: the survivors of every stage — the "what did
     * each stage drop" table every production curation run records —
-    * from [[compile]]'s stage loop with an eager boundary. Every
-    * stage's output (the input too) is checkpointed once and counted,
-    * so each stage runs exactly once, on its own action, over the
-    * materialized output of the stage before it. A stage's explicit
-    * `"materialize": false` leaves its input uncheckpointed, as in
-    * [[compile]]: that input is counted, then recomputed by the stage.
-    * The counts are actions, not a `Dataset.observe`: an `Observation`
-    * read after a lazy checkpoint reported 0 rows for a filter that
-    * kept 50,000. Retention note: local checkpoints accumulate for the
-    * session (Spark offers no safe mid-plan release) at
-    * MEMORY_AND_DISK — one surviving-corpus copy per stage, spilling
-    * to disk; audit very long chains in sections if that bounds
-    * matter. Returns (stage, op, rows_out), stage 0 = input. */
+    * from [[compile]]'s stage loop with a boundary at EVERY stage.
+    * Every stage's output (the input too) is checkpointed once and
+    * counted, so each stage runs exactly once, on its own action, over
+    * the materialized output of the stage before it; the count reads
+    * the checkpointed rows and reruns no stage. Retention note: local
+    * checkpoints accumulate for the session (Spark offers no safe
+    * mid-plan release) at MEMORY_AND_DISK — one surviving-corpus copy
+    * per stage, spilling to disk; audit very long chains in sections
+    * if that bounds matter. Returns (stage, op, rows_out), stage 0 =
+    * input. */
   def report(df: DataFrame, json: String,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = df.sparkSession
@@ -150,27 +143,27 @@ object CuratePipeline {
     val sc = df.sparkSession.sparkContext
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long, Double)]
     var producer = "input" // the stage whose output reaches the boundary
-    def count(out: DataFrame, keep: Boolean): DataFrame =
+    def count(out: DataFrame): DataFrame =
       graft.operators.Par.withJobDescription(sc, s"curate audit: $producer") {
         val t0 = System.nanoTime()
-        val kept = if (keep) graft.operators.Materialize.checkpoint(out) else out
+        val kept = graft.operators.Materialize.checkpoint(out)
         rows += ((rows.size, producer, kept.count(), (System.nanoTime() - t0) / 1e9))
         kept
       }
-    val last = run(df, json, textCol, idCol) { (in, op, materialize) =>
-      val kept = count(in, materialize.getOrElse(true))
+    val last = run(df, json, textCol, idCol) { (in, op) =>
+      val kept = count(in)
       producer = op
       kept
     }
-    count(last, keep = true)
+    count(last)
     rows.toSeq
   }
 
   /** The one loop over a CURATE body's `stages`: per stage, read its
-    * op and explicit `"materialize"`, pass its input through the
-    * caller's `boundary` policy, then apply the stage. */
+    * op, pass its input through the caller's `boundary` policy, then
+    * apply the stage. */
   private def run(df: DataFrame, json: String, textCol: String, idCol: String)(
-      boundary: (DataFrame, String, Option[Boolean]) => DataFrame): DataFrame = {
+      boundary: (DataFrame, String) => DataFrame): DataFrame = {
     val stages = JsonMethods.parse(json) \ "stages" match {
       case JArray(xs) => xs
       case _ => throw new DslException("curate body must have a 'stages' array")
@@ -189,7 +182,7 @@ object CuratePipeline {
       // extra exchange measured as a net loss. No-op at scale (Par.widen
       // derives the decision from input size) and for non-file seeds.
       val in = if (k == 0 && mapKernelOps(op)) graft.operators.Par.widen(cur) else cur
-      applyStage(boundary(in, op, boolOpt(st, "materialize")), op, st, textCol, idCol)
+      applyStage(boundary(in, op), op, st, textCol, idCol)
     }
   }
 
@@ -201,8 +194,9 @@ object CuratePipeline {
   private val mapKernelOps = Set("url_filter", "html_extract", "normalize",
     "c4_clean", "gopher_filter", "pii_redact")
 
-  /** stages whose operators consume their input more than once */
-  private val materializeByDefault = Set("lm_quality_filter", "perplexity_filter",
+  /** stages whose operators consume their input more than once: the
+    * inputs [[compile]] checkpoints */
+  private val materializeInput = Set("lm_quality_filter", "perplexity_filter",
     "dsir_filter", "minhash_neardup", "decontaminate",
     "dedup_substrings", "tokenize", "nb_class_filter",
     "perceptron_filter", "repetition_filter", "token_budget",
@@ -318,8 +312,7 @@ object CuratePipeline {
           val sigs = graft.operators.Par.withJobDescription(sc,
             "curate: minhash sigs checkpoint") {
             graft.operators.Materialize.checkpoint(
-              Dedup.minhashSignatures(df, textCol, idCol, shingleN, k),
-              eager = false)
+              Dedup.minhashSignatures(df, textCol, idCol, shingleN, k))
           }
           val mhCols = (0 until k).map(j => col(s"mh$j"))
           val nonNull = sigs.filter(col("mh0").isNotNull)
@@ -947,12 +940,9 @@ object CuratePipeline {
     }
 
   private def bool(st: JValue, field: String, default: Boolean): Boolean =
-    boolOpt(st, field).getOrElse(default)
-
-  private def boolOpt(st: JValue, field: String): Option[Boolean] =
     st \ field match {
-      case JBool(b) => Some(b)
-      case JNothing => None
+      case JBool(b) => b
+      case JNothing => default
       case other => throw new DslException(s"'$field' must be a boolean, got $other")
     }
 

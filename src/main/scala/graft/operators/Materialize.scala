@@ -7,39 +7,45 @@ import org.apache.spark.sql.DataFrame
   *
   * Iterative operators (connected components, PageRank, perceptron
   * rounds, BPE merge rounds) and the curate pipeline cut lineage at
-  * stage boundaries. The default primitive is `localCheckpoint`:
-  * cheapest (executor-local storage, no extra I/O path), exactly right
-  * for gate scale and for any cluster with stable executors. Its known
-  * limit is durability — executor-local blocks disappear with the
-  * executor (node loss, dynamic-allocation downscale), which at the
-  * 100 TB design point can kill a long lineage mid-round.
+  * stage boundaries. Every such checkpoint is eager: it runs as a job
+  * of its own, under the caller's job description, before the call
+  * returns, so no consumer job ever builds it. The default primitive is
+  * `localCheckpoint`: cheapest (executor-local storage, no extra I/O
+  * path), exactly right for gate scale and for any cluster with stable
+  * executors. Its known limit is durability — executor-local blocks
+  * disappear with the executor (node loss, dynamic-allocation
+  * downscale), which at the 100 TB design point can kill a long lineage
+  * mid-round.
   *
   * `spark.graft.checkpoint.mode=reliable` flips EVERY such
   * materialization to a reliable `checkpoint()` written under
   * `spark.graft.checkpoint.dir` — the production stance where
   * intermediates must survive executor churn. The dir is required:
   * only the deployment knows a cluster-visible path, and a driver-local
-  * default would not be durable. One config, no call-site changes,
-  * identical results either way: a checkpoint only materializes rows,
-  * it never changes them.
+  * default would not be durable. Reliable files are deleted once their
+  * frame is garbage-collected only under
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, a
+  * context-creation setting: `GraftSession.build` sets it, and a
+  * spark-submit deployment sets it itself. One config, no call-site
+  * changes, identical results either way: a checkpoint only
+  * materializes rows, it never changes them.
   */
 object Materialize {
 
-  /** `df` materialized with a cut lineage: `localCheckpoint(eager)` by
-    * default, a reliable `checkpoint(eager)` when
+  /** `df` materialized with a cut lineage: `localCheckpoint()` by
+    * default, a reliable `checkpoint()` when
     * `spark.graft.checkpoint.mode=reliable`, which requires
     * `spark.graft.checkpoint.dir`. */
-  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
+  def checkpoint(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.get("spark.graft.checkpoint.mode", "local") match {
       case "reliable" =>
         val dir = spark.conf.getOption("spark.graft.checkpoint.dir").getOrElse(
           throw new IllegalArgumentException("spark.graft.checkpoint.mode=reliable " +
             "needs spark.graft.checkpoint.dir, a cluster-visible path"))
-        val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint(eager)
-      case "local" => df.localCheckpoint(eager)
+        if (spark.sparkContext.getCheckpointDir.isEmpty) spark.sparkContext.setCheckpointDir(dir)
+        df.checkpoint()
+      case "local" => df.localCheckpoint()
       case other => throw new IllegalArgumentException(
         s"spark.graft.checkpoint.mode must be local|reliable, got '$other'")
     }

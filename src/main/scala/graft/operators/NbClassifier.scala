@@ -54,9 +54,8 @@ object NbClassifier {
     val cl = trainToks.groupBy(col("__c"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-      // read by vocab, totals AND the scoring join; lazy — the first
-      // consumer materializes the model in its own pass (r18)
-      .transform(Materialize.checkpoint(_, eager = false))
+      // read by vocab, totals AND the scoring join
+      .transform(Materialize.checkpoint(_))
     // vocabulary = distinct tokens across the (pruned) model
     val vocab = cl.select(col("tok")).distinct()
     // vocab size and corpus size stay PLAN NODES (one-row frames that

@@ -65,11 +65,11 @@ object Sampling {
     val keys = shardCol.map(col).toSeq ++ order
     val ranged = Materialize.checkpoint(df.repartitionByRange(keys: _*)
       .sortWithinPartitions(keys: _*)
-      .withColumn("__v", coalesce(value.cast("long"), lit(0L))), eager = false)
+      .withColumn("__v", coalesce(value.cast("long"), lit(0L))))
     // a run: consecutive rows of one shard in a partition (NULL is a shard)
     def sameShard(a: Any, b: Any): Boolean = java.util.Objects.deepEquals(a, b)
-    // pass 1, which also materializes `ranged`: (partition, shard, sum)
-    // of every run, in partition order — that is, in (shard, order) order
+    // pass 1: (partition, shard, sum) of every run, in partition order —
+    // that is, in (shard, order) order
     val runs = ranged.select(shardCol.fold(lit(null))(col), col("__v")).rdd
       .mapPartitionsWithIndex { (p, rows) =>
         val sums = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long)]

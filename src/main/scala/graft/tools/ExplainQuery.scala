@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: print the formatted physical plan of one or more
   * SparkEntry queries (comma-separated) against a testdata dir —
   * `runMain graft.tools.ExplainQuery q_semdedup[,q_x] [sfDir]`. */
@@ -9,11 +7,8 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q_agg_pricing").split(",").map(_.trim)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.configure(spark)
     names.foreach { name =>
       println(s"===== $name =====")
       graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
 
@@ -12,20 +11,13 @@ import scala.collection.concurrent.TrieMap
   * components, per-stage checkpoints, broadcast-round training loops).
   *
   * Usage: runMain graft.tools.QueryProfile q_a[,q_b] [sfDir]
-  * Env: SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_CPUS (default: the host's cores).
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q_agg_pricing").split(",").map(_.trim)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.configure(spark)
+    val spark = graft.GraftSession.build()
 
     final case class JobRec(desc: String, start: Long, var end: Long = 0L,
       var stages: Int = 0, var tasks: Int = 0,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-stage wall profile of a FineWeb recipe VARIANT (r17: the curate
   * quartet drift watch — when the v2/v3 aggregates move round-over-
   * round with unchanged plans, this prints where, stage by stage,
@@ -18,15 +16,7 @@ object StageProfile {
     require(args.length >= 2, "usage: StageProfile <sfDir> <v1|v2|v3>")
     val dir = args(0)
     val variant = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stage-profile")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.configure(spark)
+    val spark = graft.GraftSession.build()
     val ts = graft.queries.QueriesData.fineWebStageTimings(spark, dir, variant)
       .drop(1).map { case (_, op, _, t) => (op, t) } // stage 0 is the input
     val body = ts.map { case (op, t) =>

@@ -33,15 +33,7 @@ object StreamStateStress {
     require(args.length == 3,
       "usage: StreamStateStress <sf0.1dir> <sf1dir> <out.json>")
     val Array(baseDir, bigDir, outPath) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.configure(spark)
+    val spark = graft.GraftSession.build()
 
     val results = new StringBuilder("{")
     def record(name: String, json: String): Unit = {

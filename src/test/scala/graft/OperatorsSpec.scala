@@ -2164,17 +2164,56 @@ class OperatorsSpec extends AnyFunSuite {
           s"stage $k (${r.getString(1)})")
       }
     }
-    // the q_curate_report chain, with one explicit "materialize": false
+    // the q_curate_report chain
     check(Tables.load(spark, sf01, "documents").select("doc_id", "source", "text"),
       """{"stages": [
         {"op": "c4_clean", "require_pass": false},
         {"op": "normalize"},
         {"op": "pii_redact"},
-        {"op": "dedup_exact", "materialize": false},
+        {"op": "dedup_exact"},
         {"op": "cap_per_group", "group": "source", "salt": "cap-v1", "cap": 7}
       ]}""")
     check(graft.queries.QueriesData.fineWebSeed(spark, sf01),
       graft.queries.QueriesData.fineWebSpec)
+  }
+
+  test("curate: a stage's input checkpoint runs under its label before compile returns") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val label = "curate: repetition_filter input checkpoint"
+    val labelled = new java.util.concurrent.ConcurrentHashMap[Int, Long]() // job -> start
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()     // job -> end
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .contains(label)) labelled.put(e.jobId, e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // an in-memory, exchange-free input: only a job of the boundary's
+      // own can materialize it under the label
+      val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2L, "spam spam spam spam spam spam spam spam")).toDF("doc_id", "text")
+      val out = graft.dsl.CuratePipeline.compile(docs,
+        """{"stages": [{"op": "repetition_filter", "max_dup_gram_frac": 0.5,
+            "min_distinct_ratio": 0.5}]}""")
+      val returned = System.currentTimeMillis()
+      assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L))
+      // the listener bus is asynchronous — settle
+      var tries = 0
+      def runs = labelled.asScala.toMap.map { case (j, t) => (j, t, ends.asScala.get(j)) }
+      while ((runs.isEmpty || runs.exists(_._3.isEmpty)) && tries < 50) {
+        Thread.sleep(100); tries += 1
+      }
+      assert(runs.nonEmpty, s"no job ran as '$label'")
+      runs.foreach { case (job, start, end) =>
+        assert(end.exists(e => start <= returned && e <= returned),
+          s"job $job as '$label' ran [$start, $end]; compile returned at $returned")
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   // ------------------------------------------------------------- urls
@@ -3474,6 +3513,10 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("Materialize: reliable mode checkpoints durably, results identical, bad mode loud (r18)") {
     import spark.implicits._
+    // the built context deletes reliable files of collected frames, so
+    // per-round checkpoints of the iterative operators do not pile up
+    assert(spark.sparkContext.getConf
+      .getBoolean("spark.cleaner.referenceTracking.cleanCheckpoints", false))
     val df = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k")
     val local = Materialize.checkpoint(df).collect().toSet
     // an isolated session so the mode flip can't leak to other tests

@@ -59,8 +59,8 @@ import graft.operators.{Dedup, Sampling, Sketches, TextOps}
   *  - one shuffle + semi-join back: `repetition_filter` (per-doc
   *    scalars are map-only; the top-gram rank shuffles on (doc,
   *    gram), bounded by tokens-per-doc), `hash_neardup` (banded
-  *    16-bit Hamming self-join, never all-pairs, + min-label
-  *    propagation).
+  *    16-bit Hamming self-join, never all-pairs, + connected
+  *    components: one job per round, O(log diameter) rounds).
   *  - distributed prefix scan + semi-join back: `token_budget` (one
   *    range shuffle; per-partition sums broadcast back as offsets and
   *    added map-side — shard-local with `shard`).
@@ -70,8 +70,8 @@ import graft.operators.{Dedup, Sampling, Sketches, TextOps}
   *    the score is computed over the CURRENT stage input),
   *    `decontaminate` (benchmark shingle set broadcasts; corpus side
   *    is one map-side probe + per-doc count), `minhash_neardup`
-  *    (banded LSH self-join — never all-pairs — + min-label
-  *    propagation rounds bounded by cluster diameter),
+  *    (banded LSH self-join — never all-pairs — + connected
+  *    components: one job per round, O(log diameter) rounds),
   *    `perplexity_filter` (two count shuffles for the bigram LM +
   *    tf-pre-aggregated scoring joins; counts prune at min_count),
   *    `semdedup` (map-only cell assign against a broadcast codebook,

@@ -1,8 +1,14 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RelationBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.TextExprs
 
 /** Deduplication operators for training-data pipelines, each designed
@@ -224,26 +230,6 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
   }
 
-  // --------------------------------------------------------- clusters
-
-  /** Connected components over an undirected duplicate-pair list — the
-    * step after LSH that turns pairs into KEEP/DROP groups (cluster_id
-    * = min member id, the canonical keeper). Min-label propagation
-    * PLUS pointer jumping (r18): each round first takes the neighbor
-    * minimum over the edges (one shuffle join + one aggregate), then
-    * jumps L(x) ← min(L(x), L(L(x))) (one self-join) — the label a
-    * node points to is itself a node of the same component, so the
-    * jump is sound, labels only decrease, and propagation distance
-    * doubles per round: rounds drop from O(diameter) to O(log
-    * diameter). (Measured r18: the fineweb minhash chain converged in
-    * 11 propagation-only rounds ≈ 55 tiny jobs; with jumping it takes
-    * 4.) Convergence is detected with a count of changed rows across
-    * BOTH steps — a neighbor-min fixpoint alone already implies the
-    * correct labeling, so stopping when neither step changes anything
-    * is exact; `Materialize.checkpoint` cuts lineage so the iteration
-    * count never grows the plan. `maxIter` is a safety stop, and
-    * hitting it throws rather than returning a half-converged
-    * labeling. */
   /** Benchmark decontamination: per training document, how many of its
     * distinct word n-grams appear ANYWHERE in the benchmark split —
     * the n-gram-overlap contamination check used when assembling
@@ -387,69 +373,103 @@ object Dedup {
       .select(df.columns.map(col).toIndexedSeq: _*)
   }
 
+  // --------------------------------------------------------- clusters
+
+  /** Connected components of the undirected graph whose edges are the
+    * rows of `pairs` (`aCol` – `bCol`): one row `(id, cluster_id)` per
+    * distinct id, `cluster_id` the smallest id of its component in
+    * Spark's ordering of the id type (UTF-8 byte order for strings).
+    * Both columns keep the id column's type. As in a SQL join, a NULL id
+    * matches nothing: it yields one `(NULL, NULL)` row and leaves its
+    * partner a singleton unless other pairs connect it. A self-pair
+    * `(x, x)` yields `(x, x)`. Ids are integral, decimal, boolean, date,
+    * timestamp or UTF8_BINARY strings, types whose values compare by
+    * equality; other id types are refused.
+    *
+    * Pregel-style min-label propagation (Gonzalez et al., OSDI 2014) on
+    * the Catalyst values: both directions of every pair are
+    * hash-partitioned once on their source id into
+    * `spark.sql.shuffle.partitions` partitions and persisted there.
+    * Labels `(id, label)` share that partitioner, so edges meet their
+    * source's label in place and `labels ⟕ messages` is a narrow join;
+    * only messages and the pointer jump move. One round:
+    *  - an id whose label changed in the previous round (every id, in
+    *    the first) sends it along its edges, as Pregel's vote to halt:
+    *    an unchanged label already reached every neighbour, whose label
+    *    can only have fallen since. The messages are min-combined
+    *    map-side and shuffled once;
+    *  - a pointer jump `L(x) ← min(L(x), L(L(x)))`: a request shuffle
+    *    keyed by `L(x)` and an answer shuffle back to `x`. `L(x)` is an
+    *    id of x's own component, so the jump stays inside it, and it
+    *    doubles how far a label travels per round: a chain of diameter
+    *    d settles in O(log d) rounds, not d;
+    *  - the change flag, new label < label before the round.
+    * The round's labels are checkpointed ([[Materialize]]) by the one
+    * action that counts changed labels: one job per round, plus the
+    * checkpoint write in reliable mode. The loop stops at the first
+    * round that changes nothing. Then no edge can lower either end, so
+    * both ends of every edge carry one label, the component minimum
+    * (the classical fixpoint). Not converging in `maxIter` rounds is
+    * an error. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // restore the caller's job description on every exit path (ADVICE
-    // r17: a trailing setJobDescription(null) clobbered outer labels)
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    try {
-    sc.setJobDescription("cc: edges")
-    val edges = Materialize.checkpoint(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct())
-    sc.setJobDescription("cc: init labels")
-    var labels = Materialize.checkpoint(
-      edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("cluster_id")))
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(edges("src").as("nid")).agg(min("cluster_id").as("nmin"))
-      // the change flag rides in the SAME join (r17: the old separate
-      // updated⋈labels diff join re-shuffled the label table once per
-      // round just to count decreases — the old label is already on
-      // the row being updated), so each round costs exactly one join +
-      // one aggregate; the count runs over the round's checkpoint
-      sc.setJobDescription(s"cc: round ${i + 1}")
-      val l1 = Materialize.checkpoint(
-        labels.join(neighborMin, labels("id") === neighborMin("nid"), "left")
-          .select(labels("id"),
-            least(labels("cluster_id"),
-              coalesce(col("nmin"), labels("cluster_id"))).as("cluster_id"),
-            (coalesce(col("nmin"), labels("cluster_id")) < labels("cluster_id"))
-              .as("__chg")))
-      sc.setJobDescription(s"cc: round ${i + 1} changed-count")
-      changed = l1.filter(col("__chg")).count()
-      if (changed == 0 || i == 0) {
-        // changed == 0: the propagation step is a fixpoint — the
-        // classical exact termination criterion; a jump would be a
-        // no-op. Round 1 also skips the jump: dedup clusters are
-        // overwhelmingly stars (diameter 1, labels settle in one
-        // propagation), where a jump is always a no-op — deep chains
-        // start jumping from round 2 and still converge in O(log d).
-        labels = l1.drop("__chg")
-      } else {
-        // pointer jump: follow the label one hop (L(x) ← min(L(x),
-        // L(L(x)))). L(x) is always a node id of x's own component, so
-        // the looked-up label is a valid (possibly smaller) label for
-        // x, and propagation distance doubles per round. Convergence is
-        // still judged on the propagation step alone, so the loop exits
-        // at exactly the classical fixpoint.
-        sc.setJobDescription(s"cc: round ${i + 1} jump")
-        val ptr = l1.select(col("id").as("__pid"), col("cluster_id").as("__pc"))
-        labels = Materialize.checkpoint(
-          l1.join(ptr, l1("cluster_id") === col("__pid"), "left")
-            .select(l1("id"),
-              least(l1("cluster_id"),
-                coalesce(col("__pc"), l1("cluster_id"))).as("cluster_id")))
+    val spark = pairs.sparkSession
+    val both = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+    val id = both.schema("src")
+    val t = id.dataType
+    require(t match {
+      case StringType | BooleanType | ByteType | ShortType | IntegerType | LongType |
+          DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+      case _ => false
+    }, s"connectedComponents needs ids whose values compare by equality, got ${t.sql}")
+    val ord = PhysicalDataType.ordering(t)
+    def least(a: Any, b: Any): Any = if (ord.lt(b, a)) b else a
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Par.withJobDescription(spark.sparkContext, "cc: edges") {
+      // rows are copied: Catalyst reuses them, and a string points into its row
+      val edges = both.queryExecution.toRdd
+        .map { r => val c = r.copy(); (c.get(0, t), c.get(1, t)) }
+        .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+      // labels and the round's result: (id, (label, changed))
+      def round(labels: RDD[(Any, (Any, Boolean))]): RDD[(Any, (Any, Boolean))] = {
+        // edges and labels share `part`, so partition i of each holds the
+        // same ids: the edges stream past a map of the ids that send
+        val messages = edges.zipPartitions(labels) { (es, ls) =>
+          val sending = ls.collect { case (x, (l, true)) if l != null => x -> l }.toMap
+          es.flatMap { case (src, dst) => if (dst == null) None else sending.get(src).map(dst -> _) }
+        }.reduceByKey(part, least(_, _))
+        val propagated = labels.leftOuterJoin(messages, part)
+          .mapValues { case ((l, _), m) => (m.fold(l)(least(l, _)), l) }
+        val jumps = propagated
+          .flatMap { case (x, (l, _)) => if (l == null) None else Some(l -> x) }
+          .join(propagated, part)
+          .map { case (_, (x, (ll, _))) => x -> ll }
+        propagated.leftOuterJoin(jumps, part).mapValues { case ((l, before), ll) =>
+          val jumped = ll.fold(l)(least(l, _))
+          (jumped, jumped != before)
+        }
       }
-      i += 1
+      try {
+        // every id starts as its own label, marked changed so it sends
+        var labels: RDD[(Any, (Any, Boolean))] = edges.mapPartitions(
+          _.map(_._1).distinct.map(v => v -> (v, true)), preservesPartitioning = true)
+        var changed = 1L
+        var i = 0
+        while (changed > 0 && i < maxIter) {
+          spark.sparkContext.setJobDescription(s"cc: round ${i + 1}")
+          val next = round(labels)
+          changed = Materialize.checkpoint(spark, next)(_.filter(_._2._2).count())
+          labels.unpersist(blocking = false)
+          labels = next
+          i += 1
+        }
+        require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
+        RelationBridge.ofInternalRows(spark,
+          labels.map { case (x, (l, _)) => InternalRow(x, l) },
+          StructType(Seq(StructField("id", t, id.nullable),
+            StructField("cluster_id", t, id.nullable))))
+      } finally edges.unpersist(blocking = false)
     }
-    require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
-    labels
-    } finally sc.setJobDescription(prevDesc)
   }
 }

@@ -1,11 +1,14 @@
 /* Lives under org.apache.spark.sql to reach private[sql] plumbing:
- * Dataset.ofRows and the HadoopFsRelation/LogicalRelation constructors.
- * Used by table-format sources (Delta) to plan a log-defined file set as
- * ONE parquet relation whose partition pruning runs against an in-memory
- * manifest instead of a per-partition Union fan. */
+ * Dataset.ofRows, the HadoopFsRelation/LogicalRelation constructors and
+ * internalCreateDataFrame. Used by table-format sources (Delta) to plan
+ * a log-defined file set as ONE parquet relation whose partition pruning
+ * runs against an in-memory manifest instead of a per-partition Union
+ * fan, and by RDD operators to hand back Catalyst rows as a frame. */
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
@@ -16,6 +19,12 @@ object RelationBridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A frame over the Catalyst rows, of `schema`, that an RDD operator
+    * computed. */
+  def ofInternalRows(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** One parquet `HadoopFsRelation` over an explicit [[FileIndex]].
     * Output columns are `dataSchema ++ partitionSchema` (partition values

@@ -1436,6 +1436,132 @@ class OperatorsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == got)
   }
 
+  // ---- the DataFrame label propagation connected components replaced,
+  // kept as the reference: a checkpointed join + aggregate per round, a
+  // pointer jump from round 2, convergence judged on propagation alone
+  private def refConnectedComponents(pairs: DataFrame, aCol: String,
+      bCol: String): DataFrame = {
+    val edges = Materialize.checkpoint(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+        .distinct())
+    var labels = Materialize.checkpoint(
+      edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("cluster_id")))
+    var changed = 1L
+    var i = 0
+    while (changed > 0 && i < 50) {
+      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
+        .groupBy(edges("src").as("nid")).agg(min("cluster_id").as("nmin"))
+      val l1 = Materialize.checkpoint(
+        labels.join(neighborMin, labels("id") === neighborMin("nid"), "left")
+          .select(labels("id"),
+            least(labels("cluster_id"),
+              coalesce(col("nmin"), labels("cluster_id"))).as("cluster_id"),
+            (coalesce(col("nmin"), labels("cluster_id")) < labels("cluster_id"))
+              .as("__chg")))
+      changed = l1.filter(col("__chg")).count()
+      if (changed == 0 || i == 0) labels = l1.drop("__chg")
+      else {
+        val ptr = l1.select(col("id").as("__pid"), col("cluster_id").as("__pc"))
+        labels = Materialize.checkpoint(
+          l1.join(ptr, l1("cluster_id") === col("__pid"), "left")
+            .select(l1("id"),
+              least(l1("cluster_id"),
+                coalesce(col("__pc"), l1("cluster_id"))).as("cluster_id")))
+      }
+      i += 1
+    }
+    assert(changed == 0)
+    labels
+  }
+
+  test("connected components: equal to the DataFrame propagation on seeded graphs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20261019L)
+    def chain(ids: Seq[Long]) = ids.zip(ids.tail)
+    def cycle(ids: Seq[Long]) = chain(ids :+ ids.head)
+    def star(c: Long, leaves: Seq[Long]) = leaves.map(c -> _)
+    def clique(ids: Seq[Long]) = ids.combinations(2).map(p => p(0) -> p(1)).toSeq
+    // a 70-node chain whose minimum sits at one end, one on shuffled ids,
+    // stars, cliques and cycles on random ids, a lone self-pair and a
+    // self-pair on an id with another edge
+    val graphs = Seq(chain((1L to 70L).reverse), chain(rnd.shuffle((100L until 170L).toList)),
+      star(200L, 201L to 220L), star(299L, Seq(230L, 231L, 232L)),
+      clique(rnd.shuffle((300L until 306L).toList)), clique(Seq(310L, 311L)),
+      cycle(rnd.shuffle((400L until 407L).toList)), cycle(Seq(420L, 410L, 430L)),
+      Seq(4L -> 4L), Seq(500L -> 501L, 501L -> 501L)).flatten
+    // duplicate and reversed pairs
+    val longPairs: Seq[(java.lang.Long, java.lang.Long)] =
+      (graphs ++ rnd.shuffle(graphs).take(20) ++ rnd.shuffle(graphs).take(20).map(_.swap))
+        .map { case (a, b) => (Long.box(a), Long.box(b)) }
+    // a NULL on either side: its partner 600 is a singleton, 601 is not
+    val withNulls = longPairs ++ Seq[(java.lang.Long, java.lang.Long)](
+      (600L, null), (null, 601L), (601L, 602L), (null, null))
+    // string ids; U+FFFD sorts below U+1F600 in UTF-8 bytes (Spark's
+    // order) but above it in UTF-16 (String.compareTo)
+    def str(v: java.lang.Long): String =
+      if (v == null) null
+      else if (v >= 400L && v < 410L) (if (v % 2 == 0) "\uD83D\uDE00" else "\uFFFD") + v
+      else f"n$v%04d"
+    val strPairs = withNulls.map { case (a, b) => (str(a), str(b)) }
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "5")
+    val longSchema = StructType(Seq(StructField("a", LongType), StructField("b", LongType)))
+    val strSchema = StructType(Seq(StructField("a", StringType), StructField("b", StringType)))
+    val inputs = Seq(
+      ("long not null", StructType(longSchema.map(_.copy(nullable = false))),
+        longPairs.map { case (a, b) => Row(a, b) }),
+      ("long", longSchema, withNulls.map { case (a, b) => Row(a, b) }),
+      ("string", strSchema, strPairs.map { case (a, b) => Row(a, b) }))
+    for (session <- Seq(spark, wide); (kind, schema, rows) <- inputs) {
+      val df = session.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val want = refConnectedComponents(df, "a", "b")
+      for (parts <- Seq(1, 3, 7)) {
+        val got = Dedup.connectedComponents(df.repartition(parts), "a", "b")
+        val tag = s"$kind parts=$parts shuffle=${session.conf.get("spark.sql.shuffle.partitions")}"
+        assert(got.schema == want.schema, tag)
+        assertSameRows(got, want, tag)
+      }
+      if (kind == "string") {
+        val labels = want.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(labels("\uD83D\uDE00400") == "\uFFFD401" && labels(null) == null)
+      }
+    }
+  }
+
+  test("connected components: one job per round on a 64-node chain") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val group = "cc-job-pin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      val ccJobs = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          ccJobs.put(e.jobId, true); jobs.incrementAndGet()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (!ccJobs.containsKey(e.jobId)) marker.countDown()
+    }
+    val pairs = (1L until 64L).map(i => (i + 1, i)).toDF("a", "b")
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "connected components over a chain")
+      val cc = try Dedup.connectedComponents(pairs, "a", "b") finally sc.clearJobGroup()
+      // the bus delivers events in order: once a later job's end is
+      // seen, every job of the call has been counted
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get >= 1 && jobs.get <= 10, s"${jobs.get} jobs for a 64-node chain")
+      assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        (1L to 64L).map(_ -> 1L).toMap)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("z-order: bit interleave pins and spatial locality of the layout") {
     import spark.implicits._
     import graft.operators.ZOrder
@@ -3534,17 +3660,31 @@ class OperatorsSpec extends AnyFunSuite {
         if (f.isDirectory) files(f) else Seq(f))
     assert(files(new java.io.File(dir)).nonEmpty,
       s"no checkpoint files under $dir")
-    // an iterative operator runs unchanged under the durable mode
+    // an iterative operator runs unchanged under the durable mode, and
+    // its RDD rounds write checkpoint files of their own
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
     val pairs2 = s2.createDataFrame(pairs.collectAsList(), pairs.schema)
-    val cc = Dedup.connectedComponents(pairs2, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = files(new java.io.File(dir)).map(_.getPath).toSet
+    val ccDf = Dedup.connectedComponents(pairs2, "a", "b")
+    val written = files(new java.io.File(dir)).map(_.getPath).toSet -- before
+    assert(written.nonEmpty, s"connected components wrote no checkpoint files under $dir")
+    val cc = ccDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    // the RDD form: cut by the forcing action, into the dir when reliable
+    val rdd = s2.sparkContext.parallelize(1 to 10, 2)
+    assert(Materialize.checkpoint(s2, rdd)(_.count()) == 10L)
+    assert(rdd.isCheckpointed && rdd.getCheckpointFile.exists(_.startsWith("file:" + dir)))
+    val localRdd = spark.sparkContext.parallelize(1 to 10, 2)
+    assert(Materialize.checkpoint(spark, localRdd)(_.sum()) == 55.0)
+    assert(localRdd.isCheckpointed && localRdd.getCheckpointFile.isEmpty)
     val s3 = spark.newSession()
     s3.conf.set("spark.graft.checkpoint.mode", "banana")
     val df3 = s3.createDataFrame(df.collectAsList(), df.schema)
     val e = intercept[IllegalArgumentException] { Materialize.checkpoint(df3) }
     assert(e.getMessage.contains("banana"))
+    intercept[IllegalArgumentException] {
+      Materialize.checkpoint(s3, s3.sparkContext.parallelize(1 to 3))(_.count())
+    }
     // reliable with no dir is loud, even though the context above
     // already holds a checkpoint dir: no driver-local fallback
     val s4 = spark.newSession()

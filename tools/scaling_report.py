@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
-"""Merge two graft.Bench JSON lines (sf0.1 baseline and synthetic sf1)
+"""Merge two graft.Bench full records (sf0.1 baseline and synthetic sf1)
 into BENCH_sf1_scaling.json: per-query times, sf1/sf0.1 ratios, and a
 verdict per query (6x-15x ~ linear for 10x data + fixed overheads;
 superlinear > 15x flags a hidden shuffle/skew; sublinear < 6x means
 overheads amortized and says little about asymptotics).
 
-Usage: scaling_report.py <base_bench.log> <sf1_bench.log> <out.json>
-The logs are sbt runMain graft.Bench stdout; the JSON line is extracted
-by the "metric" marker.
+Usage: scaling_report.py <base_full.json> <sf1_full.json> <out.json>
+The inputs are the bench_full_c<N>.json records graft.Bench writes (its
+stdout line carries only totals); the JSON line is found by the
+"metric" marker. Each argument may list several comma-separated files.
 """
 import json
 import re
@@ -58,8 +59,8 @@ def bench_json(path: str) -> dict:
 
 
 def merged(paths: str) -> dict:
-    """comma-separated bench logs; later logs override earlier queries
-    (re-runs after an interrupted sweep), total recomputed"""
+    """comma-separated bench records; later records override earlier
+    queries (re-runs after an interrupted sweep), total recomputed"""
     out = {"queries": {}}
     for p in paths.split(","):
         out["queries"].update(bench_json(p)["queries"])

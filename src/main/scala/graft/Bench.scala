@@ -81,9 +81,9 @@ object Bench {
     // null in the full record, excluded from the total, and listed in
     // "failed". The STDOUT line is the compact record: total, query and
     // failure counts, sf and the full record's path. Per-query times
-    // (~8 KB at 248 queries), raw samples ("runs") and the fineweb
-    // per-stage times live only in the full record, since a stdout
-    // reader that keeps a ~2,000-char tail must get the whole line.
+    // (~8 KB at 248 queries) and raw samples ("runs") live only in the
+    // full record, since a stdout reader that keeps a ~2,000-char tail
+    // must get the whole line.
     def ms(t: Double): String = (math.round(t * 1000) / 1000.0).toString
     val qsFull = results.map { case (k, ts, ok) =>
       "\"" + k + "\":" + (if (ok) ts.min.toString else "null")
@@ -94,27 +94,8 @@ object Bench {
     val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.collect { case (_, ts, true) => ts.min }.sum
-    // north-star visibility (r12): the FineWeb recipe's PER-STAGE wall
-    // times ride along once per sweep, so a regression in one stage
-    // shows by name instead of hiding in the recipe's aggregate. They
-    // come from the CURATE audit: one action per stage, each over the
-    // previous stage's checkpoint
-    val fwStages: Option[String] =
-      if (results.exists { case (k, _, ok) => k == "q_curate_fineweb" && ok })
-        try {
-          sweepCaches()
-          val ts = graft.queries.QueriesData.fineWebStageTimings(spark, sfDir, "v1")
-          Some(ts.drop(1).map { case (_, k, _, v) =>
-            "\"" + k + "\":" + (math.round(v * 1000) / 1000.0)
-          }.mkString("{", ",", "}"))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] fineweb stage timings failed: ${e.getMessage}")
-          None
-        }
-      else None
-    val fwField = fwStages.map(s => s""","fineweb_stages":$s""").getOrElse("")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"runs":$runs,"failed":$failed$fwField,"sf":"$sfDir"}"""
-    // full-precision record with raw samples + fineweb stages, persisted
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"runs":$runs,"failed":$failed,"sf":"$sfDir"}"""
+    // full-precision record with raw samples, persisted
     // per-run: the default name carries the core count so a lower-core
     // scaling sweep can never overwrite the 32-core record (VERDICT r17:
     // the driver's 8-core run clobbered bench_full_latest.json at 04:28)

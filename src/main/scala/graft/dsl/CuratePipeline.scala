@@ -1,6 +1,10 @@
 package graft.dsl
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import java.util.concurrent.TimeoutException
+
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -100,75 +104,74 @@ import graft.operators.{Dedup, Sampling, Sketches, TextOps}
 object CuratePipeline {
   import JsonQuery.DslException
 
+  /** The CURATE body `json` applied to `df`: one lazy frame whose plan
+    * every consumer (a CTAS, [[report]], a caller's action) runs.
+    * Stages whose operators read their input more than once get that
+    * input checkpointed first ([[materializeInput]]), as a job of its
+    * own under the label `curate: <op> input checkpoint`, before this
+    * returns. Every stage's output, and the seed, carries one
+    * [[Observation]] counting its rows; an action over the frame
+    * delivers them (`SHOW QUERY METRICS` records them per action).
+    * Observations are per action: a partial action such as `show`
+    * records partial counts. */
   def compile(df: DataFrame, json: String,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    run(df, json, textCol, idCol) { (in, op) =>
-      // stage-boundary materialization: model-based and multi-consumer
-      // stages read their input several times (an LM trains on it,
-      // scores it, and the verdict semi-joins back); checkpointing the
-      // input truncates the re-computation of everything upstream —
-      // the production stance of writing intermediates between
-      // pipeline phases. The checkpoint is a job of its own, run here
-      // under the stage's label.
-      if (materializeInput(op))
-        graft.operators.Par.withJobDescription(in.sparkSession.sparkContext,
-          s"curate: $op input checkpoint")(graft.operators.Materialize.checkpoint(in))
-      else in
-    }
+    run(df, json, textCol, idCol)._1
 
-  /** Per-stage audit: the survivors of every stage — the "what did
-    * each stage drop" table every production curation run records —
-    * from [[compile]]'s stage loop with a boundary at EVERY stage.
-    * Every stage's output (the input too) is checkpointed once and
-    * counted, so each stage runs exactly once, on its own action, over
-    * the materialized output of the stage before it; the count reads
-    * the checkpointed rows and reruns no stage. Retention note: local
-    * checkpoints accumulate for the session (Spark offers no safe
-    * mid-plan release) at MEMORY_AND_DISK — one surviving-corpus copy
-    * per stage, spilling to disk; audit very long chains in sections
-    * if that bounds matter. Returns (stage, op, rows_out), stage 0 =
-    * input. */
+  /** The survivors of every stage, the "what did each stage drop" table
+    * a production curation run records: (stage, op, rows_out), stage 0
+    * = input. It runs [[compile]]'s plan once, by one noop write over
+    * the compiled frame, and reads the rows from the observations that
+    * plan delivers, so it costs what the CURATE statement costs and
+    * keeps no copy of the corpus beyond compile's own input
+    * checkpoints. A count that is not delivered within a fixed bound,
+    * or that arrives without a value, fails the report naming its
+    * stage; it never reads as 0. */
   def report(df: DataFrame, json: String,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    audit(df, json, textCol, idCol).map { case (k, op, n, _) => (k, op, n) }
-      .toDF("stage", "op", "rows_out")
+    val (out, observed) = run(df, json, textCol, idCol)
+    graft.operators.Par.withJobDescription(spark.sparkContext, "curate report")(
+      out.write.format("noop").mode("overwrite").save())
+    val deadline = System.nanoTime() + ObservationWait.toNanos
+    observed.map { case (k, op, obs) =>
+      val row = try Await.result(obs.future, (deadline - System.nanoTime()).max(0L).nanos)
+        catch { case _: TimeoutException => throw new DslException(
+          s"curate report: stage $k ($op) delivered no row count within $ObservationWait") }
+      if (row.length == 0 || row.isNullAt(0)) throw new DslException(
+        s"curate report: stage $k ($op) delivered an observation without a row count")
+      (k, op, row.getLong(0))
+    }.toDF("stage", "op", "rows_out")
   }
 
-  /** [[report]] with each row's `seconds`: the wall time of the action
-    * that materialized and counted that stage's output. */
-  private[graft] def audit(df: DataFrame, json: String,
-      textCol: String = "text", idCol: String = "doc_id"): Seq[(Int, String, Long, Double)] = {
-    val sc = df.sparkSession.sparkContext
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long, Double)]
-    var producer = "input" // the stage whose output reaches the boundary
-    def count(out: DataFrame): DataFrame =
-      graft.operators.Par.withJobDescription(sc, s"curate audit: $producer") {
-        val t0 = System.nanoTime()
-        val kept = graft.operators.Materialize.checkpoint(out)
-        rows += ((rows.size, producer, kept.count(), (System.nanoTime() - t0) / 1e9))
-        kept
-      }
-    val last = run(df, json, textCol, idCol) { (in, op) =>
-      val kept = count(in)
-      producer = op
-      kept
-    }
-    count(last)
-    rows.toSeq
-  }
+  /** how long [[report]] waits, in all, for its observations: the
+    * listener bus delivers them after the action returns */
+  private val ObservationWait = 60.seconds
+
+  /** numbers each [[run]], so the observation names of two compiled
+    * frames never clash within one plan */
+  private val runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** The one loop over a CURATE body's `stages`: per stage, read its
-    * op, pass its input through the caller's `boundary` policy, then
-    * apply the stage. */
-  private def run(df: DataFrame, json: String, textCol: String, idCol: String)(
-      boundary: (DataFrame, String) => DataFrame): DataFrame = {
+    * op, checkpoint its input when [[materializeInput]] names the op,
+    * apply the stage and observe its row count. Returns the output
+    * and the observations as (stage, op, observation), stage 0 = the
+    * seed. */
+  private def run(df: DataFrame, json: String, textCol: String,
+      idCol: String): (DataFrame, Seq[(Int, String, Observation)]) = {
     val stages = JsonMethods.parse(json) \ "stages" match {
       case JArray(xs) => xs
       case _ => throw new DslException("curate body must have a 'stages' array")
     }
-    stages.zipWithIndex.foldLeft(df) { case (cur, (st, k)) =>
+    val id = runs.incrementAndGet()
+    val observed = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Observation)]
+    def observe(out: DataFrame, op: String): DataFrame = {
+      val obs = Observation(s"curate $id: ${observed.size} $op")
+      observed += ((observed.size, op, obs))
+      out.observe(obs, count(lit(1)).as("rows"))
+    }
+    val out = stages.zipWithIndex.foldLeft(observe(df, "input")) { case (cur, (st, k)) =>
       val op = st \ "op" match {
         case JString(s) => s
         case _ => throw new DslException(s"stage missing string 'op': $st")
@@ -182,8 +185,21 @@ object CuratePipeline {
       // extra exchange measured as a net loss. No-op at scale (Par.widen
       // derives the decision from input size) and for non-file seeds.
       val in = if (k == 0 && mapKernelOps(op)) graft.operators.Par.widen(cur) else cur
-      applyStage(boundary(in, op), op, st, textCol, idCol)
+      // stage-boundary materialization: an operator that reads its
+      // input several times (an LM trains on it, scores it, and the
+      // verdict semi-joins back) would otherwise recompute everything
+      // upstream per read, and the upstream observations would count
+      // each read; the checkpoint runs the upstream once, in full —
+      // the production stance of writing intermediates between
+      // pipeline phases
+      val staged =
+        if (materializeInput(op))
+          graft.operators.Par.withJobDescription(in.sparkSession.sparkContext,
+            s"curate: $op input checkpoint")(graft.operators.Materialize.checkpoint(in))
+        else in
+      observe(applyStage(staged, op, st, textCol, idCol), op)
     }
+    (out, observed.toSeq)
   }
 
   /** first-stage ops whose per-row kernel cost justifies the seed
@@ -194,13 +210,15 @@ object CuratePipeline {
   private val mapKernelOps = Set("url_filter", "html_extract", "normalize",
     "c4_clean", "gopher_filter", "pii_redact")
 
-  /** stages whose operators consume their input more than once: the
-    * inputs [[compile]] checkpoints */
+  /** stages whose operators consume their input more than once, or
+    * through a sample (a collect over a limit, a range-bounds sample):
+    * the inputs [[run]] checkpoints */
   private val materializeInput = Set("lm_quality_filter", "perplexity_filter",
     "dsir_filter", "minhash_neardup", "decontaminate",
     "dedup_substrings", "tokenize", "nb_class_filter",
     "perceptron_filter", "repetition_filter", "token_budget",
-    "semdedup", "hash_neardup", "quantile_filter")
+    "semdedup", "hash_neardup", "quantile_filter", "pack",
+    "cluster_balance", "ppl_band", "temperature_sample", "dedup_paragraphs")
 
   private def applyStage(df: DataFrame, op: String, st: JValue,
       textCol: String, idCol: String): DataFrame = {

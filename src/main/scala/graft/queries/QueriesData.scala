@@ -3227,38 +3227,6 @@ object QueriesData {
     """{"stages": [{"op": "url_filter", "block_hosts": ["ads.example.com"]},""" +
       fineWebSpecV2.drop("""{"stages": [""".length)
 
-  /** The FineWeb recipe VARIANT's per-stage audit for [[graft.Bench]]
-    * and [[graft.tools.StageProfile]]: (stage, op, rows_out, seconds)
-    * from [[graft.dsl.CuratePipeline.audit]], so the north-star path
-    * regresses visibly per stage, not only via the aggregate. Each
-    * stage is timed on ITS OWN ACTION (materializing and counting its
-    * output over the previous stage's checkpoint), so one stage's time
-    * cannot hide in another's. The variant picks seed + spec: v2 puts
-    * html_extract in front, v3 url_filter ahead of v2. */
-  private[graft] def fineWebStageTimings(s: SparkSession, dir: String,
-      variant: String): Seq[(Int, String, Long, Double)] = {
-    val (seed, spec) = variant match {
-      case "v1" => (fineWebSeed(s, dir), fineWebSpec)
-      case "v2" => (fineWebHtmlSeed(s, dir), fineWebSpecV2)
-      case "v3" =>
-        // the gate's exact URL mix (ads shard on doc_id % 9, the noisy
-        // Corpus.example.org:443 + utm decoration) so url_filter drops
-        // the same rows the real q_curate_fineweb_v3 drops and every
-        // later stage times over the gate's true input. Only the WARC
-        // write/read round trip is skipped — it is byte-identical by
-        // q_warc_scan's pin, so it contributes I/O, not rows.
-        val d = col("doc_id").cast("string")
-        (fineWebHtmlSeed(s, dir).withColumn("url",
-          when(col("doc_id") % 9 === 0,
-            concat(lit("https://ads.example.com/banner/"), d))
-          .otherwise(concat(lit("https://Corpus.example.org:443/doc/"), d,
-            lit("?utm_source=crawl")))), fineWebSpecV3)
-      case other => throw new IllegalArgumentException(
-        s"unknown fineweb variant '$other' (v1|v2|v3)")
-    }
-    graft.dsl.CuratePipeline.audit(seed, spec)
-  }
-
   /** the 11 post-seed stage CTEs, over whatever `seedCte` defines as
     * `fw0 (doc_id, lang, source, is_bench, text)` — v1 seeds clean
     * text, v2 seeds HTML and prepends the extraction replay */

@@ -19,9 +19,10 @@ import org.json4s.jackson.JsonMethods
   * `<warehouse>/_query_metrics/` (driver-side file append — NOT a Spark
   * action, so recording can never record itself, the recursion the
   * reference's store dodges by bypassing `run_query`). Open-ended
-  * shapes (the plan, the per-node metric tree) stay single JSON string
-  * columns for the same reason the reference gives: typing them would
-  * pin the schema to engine internals that change between versions.
+  * shapes (the plan, the per-node metric tree, the action's observed
+  * metrics) stay single JSON string columns for the same reason the
+  * reference gives: typing them would pin the schema to engine
+  * internals that change between versions.
   */
 object QueryMetrics {
 
@@ -68,6 +69,11 @@ object QueryMetrics {
             case (k, m) => k -> (JLong(m.value): JValue)
           }): JValue)
       }.toList)
+    // Dataset.observe metrics this action delivered, name -> values
+    // (a CURATE frame's per-stage row counts, say)
+    val observed = JObject(qe.observedMetrics.toList.sortBy(_._1).map { case (name, r) =>
+      name -> JsonMethods.parse(r.json)
+    })
     val row = JObject(List[(String, JValue)](
       "query_id" -> JString(java.util.UUID.randomUUID().toString),
       "finished_at" -> JLong(System.currentTimeMillis()),
@@ -75,7 +81,8 @@ object QueryMetrics {
       "query" -> JString(oneLine(qe.logical.toString, 2000)),
       "execution_time_ms" -> JLong(if (durationNs < 0) -1L else durationNs / 1000000L),
       "result_rows" -> JLong(resultRows),
-      "node_metrics" -> JString(JsonMethods.compact(JsonMethods.render(nodeMetrics)))) ++
+      "node_metrics" -> JString(JsonMethods.compact(JsonMethods.render(nodeMetrics))),
+      "observed_metrics" -> JString(JsonMethods.compact(JsonMethods.render(observed)))) ++
       error.map(e => "error" -> (JString(oneLine(e, 500)): JValue)).toList)
     val line = JsonMethods.compact(JsonMethods.render(row)) + "\n"
     if (remote) {
@@ -126,7 +133,7 @@ object QueryMetrics {
     import graft.sources.io.ByteStore
     val dir = ByteStore.resolve(warehouse, SubDir)
     val rows = scala.collection.mutable.ArrayBuffer.empty[
-      (String, java.sql.Timestamp, String, String, Long, Long, String)]
+      (String, java.sql.Timestamp, String, String, Long, Long, String, String)]
     if (ByteStore.isDirectory(dir)) {
       ByteStore.list(dir).foreach { f =>
         if (f.endsWith(".jsonl"))
@@ -140,13 +147,13 @@ object QueryMetrics {
                 }
                 rows += ((s("query_id"), new java.sql.Timestamp(l("finished_at")),
                   s("action"), s("query"), l("execution_time_ms"), l("result_rows"),
-                  s("node_metrics")))
+                  s("node_metrics"), s("observed_metrics")))
               } catch { case scala.util.control.NonFatal(_) => () } // skip torn lines
           }
       }
     }
     rows.sortBy(_._2.getTime)(Ordering[Long].reverse).toSeq
       .toDF("query_id", "finished_at", "action", "query",
-        "execution_time_ms", "result_rows", "node_metrics")
+        "execution_time_ms", "result_rows", "node_metrics", "observed_metrics")
   }
 }

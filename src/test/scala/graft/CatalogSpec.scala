@@ -88,7 +88,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(rows.nonEmpty, "at least one recorded action")
     val r = rows.head
     assert(r.schema.fieldNames.toSeq == Seq("query_id", "finished_at", "action",
-      "query", "execution_time_ms", "result_rows", "node_metrics"))
+      "query", "execution_time_ms", "result_rows", "node_metrics", "observed_metrics"))
     assert(rows.exists(_.getAs[String]("action") == "collect"))
     assert(rows.forall(_.getAs[Long]("execution_time_ms") >= -1))
     assert(rows.exists(_.getAs[String]("node_metrics").contains("numOutputRows")))
@@ -720,5 +720,47 @@ class CatalogSpec extends AnyFunSuite {
     assert(seqs.map(_._1).toSeq == seqs.indices.map(_.toLong),
       "sequence ids are dense from 0")
     engine.sql("DROP TABLE curated_seqs")
+  }
+
+  test("SHOW QUERY METRICS carries a CURATE statement's per-stage row counts") {
+    import spark.implicits._
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    Seq(
+      (1L, "One good clean sentence right here.\nbad line", "web"),
+      (2L, "One good clean sentence right here.\nbad line", "web"),
+      (3L, "spam spam spam spam spam spam spam spam", "web"),
+      (4L, "A different document with an address a@b.com in it.", "wiki"))
+      .toDF("doc_id", "text", "source")
+      .createOrReplaceTempView("curate_obs_src")
+    val spec = """{"stages": [
+      {"op": "c4_clean", "require_pass": false},
+      {"op": "dedup_exact"},
+      {"op": "repetition_filter", "max_dup_gram_frac": 0.5}]}"""
+    engine.sql(s"CURATE TABLE curated_obs FROM curate_obs_src USING '$spec'")
+    // every recorded action's observations, grouped by compiled frame,
+    // of the frames that observe this spec's stages
+    val ops = Seq("input", "c4_clean", "dedup_exact", "repetition_filter")
+    val Name = """curate (\d+): (\d+) (\S+)""".r
+    def frames(): Seq[Seq[(Int, String, Long)]] =
+      engine.sql("SHOW QUERY METRICS").collect().toSeq
+        .flatMap(r => JsonMethods.parse(r.getAs[String]("observed_metrics")) match {
+          case JObject(fs) => fs.collect { case (Name(id, k, op), v) =>
+            (id.toLong, (k.toInt, op, (v \ "rows") match { case JInt(n) => n.toLong; case _ => -1L }))
+          }
+          case _ => Nil
+        })
+        .groupMap(_._1)(_._2).toSeq.sortBy(_._1).map(_._2.distinct.sorted)
+        .filter(_.map(_._2) == ops)
+    // listener delivery is asynchronous; poll until the statement's
+    // checkpoint and write rows have both landed
+    val deadline = System.currentTimeMillis() + 30000
+    while (frames().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+    val recorded = frames().headOption.getOrElse(fail("no recorded per-stage counts"))
+    val expected = graft.dsl.CuratePipeline.report(spark.table("curate_obs_src"), spec)
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    assert(expected.map(_._3) == Seq(4L, 4L, 3L, 2L))
+    assert(recorded == expected)
+    engine.sql("DROP TABLE curated_obs")
   }
 }

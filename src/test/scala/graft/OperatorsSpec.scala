@@ -2279,19 +2279,23 @@ class OperatorsSpec extends AnyFunSuite {
     import org.json4s.jackson.JsonMethods
     val sf01 = sf.replace("sf0.001", "sf0.01")
     def stagesOf(spec: String) = (JsonMethods.parse(spec) \ "stages").children
-    def check(seed: org.apache.spark.sql.DataFrame, spec: String): Unit = {
-      val rows = graft.dsl.CuratePipeline.report(seed, spec).orderBy("stage").collect()
+    def check(seed: org.apache.spark.sql.DataFrame, spec: String,
+        idCol: String = "doc_id"): Unit = {
+      val rows = graft.dsl.CuratePipeline.report(seed, spec, idCol = idCol)
+        .orderBy("stage").collect()
       assert(rows.map(_.getInt(0)).toSeq == (0 to stagesOf(spec).length))
       rows.foreach { r =>
         val k = r.getInt(0)
         val prefix = JsonMethods.compact(JsonMethods.render(
           JObject("stages" -> JArray(stagesOf(spec).take(k)))))
-        assert(r.getLong(2) == graft.dsl.CuratePipeline.compile(seed, prefix).count(),
-          s"stage $k (${r.getString(1)})")
+        assert(r.getLong(2) ==
+          graft.dsl.CuratePipeline.compile(seed, prefix, idCol = idCol).count(),
+          s"stage $k (${r.getString(1)}) of $spec")
       }
     }
+    val docs = Tables.load(spark, sf01, "documents")
     // the q_curate_report chain
-    check(Tables.load(spark, sf01, "documents").select("doc_id", "source", "text"),
+    check(docs.select("doc_id", "source", "text"),
       """{"stages": [
         {"op": "c4_clean", "require_pass": false},
         {"op": "normalize"},
@@ -2301,45 +2305,138 @@ class OperatorsSpec extends AnyFunSuite {
       ]}""")
     check(graft.queries.QueriesData.fineWebSeed(spark, sf01),
       graft.queries.QueriesData.fineWebSpec)
+    // the q_curate_pipeline_v2 chain over seeded boilerplate paragraphs:
+    // dedup_paragraphs joins its rebuild back, mixture replicates rows
+    check(docs.select(col("doc_id"), col("lang"), col("source"), concat(col("text"),
+        lit("\n\nAll rights reserved."), when(col("doc_id") % 6 === 0,
+          lit("\n\nCookie policy: this site uses cookies.")).otherwise(lit("")))
+        .as("text")),
+      """{"stages": [
+        {"op": "dedup_paragraphs"},
+        {"op": "lm_quality_filter", "max_score": 3.404},
+        {"op": "stratified_sample", "strata": "lang", "salt": "strat-v2",
+         "rates": {"en": 0.7, "zh": 0.9}, "default_rate": 0.4},
+        {"op": "mixture", "group": "source", "salt": "mix-v2",
+         "weights": {"src0": 2.5, "src1": 0.5}, "default_weight": 1.0}
+      ]}""")
+    // the q_curate_cluster_balance and q_curate_ppl_band specs: models
+    // trained on the stage input, then semi-joined back
+    check(Tables.load(spark, sf01, "embeddings"),
+      """{"stages": [
+        {"op": "cluster_balance", "vec_col": "embedding",
+         "k": 4, "iters": 5, "salt": "cbs-v1", "cap": 30}]}""", idCol = "vec_id")
+    check(docs, """{"stages": [{"op": "ppl_band", "keep": ["head"]}]}""")
+    // temperature_sample: a per-group count joined back to its input
+    check(docs, """{"stages": [
+        {"op": "normalize"},
+        {"op": "temperature_sample", "group": "lang", "salt": "t-v1", "alpha": 0.5},
+        {"op": "dedup_exact"}]}""")
+    // a middle stage drops every row; a window stage and join-back
+    // stages then run over the empty corpus
+    check(docs, """{"stages": [
+        {"op": "normalize"},
+        {"op": "gopher_filter", "min_words": 1000000, "max_words": 2000000},
+        {"op": "dedup_exact"},
+        {"op": "dedup_paragraphs"},
+        {"op": "repetition_filter", "max_dup_gram_frac": 0.5}]}""")
+    // the fineweb spec with every checkpoint reliable; the context's
+    // checkpoint dir is JVM-global, so it is unset again afterwards for
+    // the tests that point reliable mode at a dir of their own
+    val rel = spark.newSession()
+    rel.conf.set("spark.graft.checkpoint.mode", "reliable")
+    rel.conf.set("spark.graft.checkpoint.dir",
+      java.nio.file.Files.createTempDirectory("graft-report-ck").toString)
+    val ckDir = spark.sparkContext.getCheckpointDir
+    try check(graft.queries.QueriesData.fineWebSeed(rel, sf01),
+      graft.queries.QueriesData.fineWebSpec)
+    finally if (ckDir.isEmpty) spark.sparkContext.setCheckpointDir(null)
+  }
+
+  /** the jobs `body` runs, counted by a listener on a job group of its
+    * own; a marker job started after `body` settles the asynchronous
+    * listener bus, which delivers events in order */
+  private def jobsOf(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val settled = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(g) if g == group + "-marker" => settled.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(settled.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not settle")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("curate report: runs compile's plan once, at most compile's jobs + 2 (sf0.01)") {
+    val seed = graft.queries.QueriesData.fineWebSeed(spark, sf.replace("sf0.001", "sf0.01"))
+    val spec = graft.queries.QueriesData.fineWebSpec
+    val compiled = jobsOf(graft.dsl.CuratePipeline.compile(seed, spec)
+      .write.format("noop").mode("overwrite").save())
+    val reported = jobsOf(graft.dsl.CuratePipeline.report(seed, spec).collect())
+    assert(compiled > 0)
+    assert(reported <= compiled + 2,
+      s"report ran $reported jobs; compile and one action over it ran $compiled")
   }
 
   test("curate: a stage's input checkpoint runs under its label before compile returns") {
     import spark.implicits._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
-    val label = "curate: repetition_filter input checkpoint"
-    val labelled = new java.util.concurrent.ConcurrentHashMap[Int, Long]() // job -> start
-    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()     // job -> end
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-            .contains(label)) labelled.put(e.jobId, e.time)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
+    def checkLabel(label: String)(compile: => DataFrame): DataFrame = {
+      val labelled = new java.util.concurrent.ConcurrentHashMap[Int, Long]() // job -> start
+      val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()     // job -> end
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+              .contains(label)) labelled.put(e.jobId, e.time)
+        override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        val out = compile
+        val returned = System.currentTimeMillis()
+        // the listener bus is asynchronous — settle
+        var tries = 0
+        def runs = labelled.asScala.toMap.map { case (j, t) => (j, t, ends.asScala.get(j)) }
+        while ((runs.isEmpty || runs.exists(_._3.isEmpty)) && tries < 50) {
+          Thread.sleep(100); tries += 1
+        }
+        assert(runs.nonEmpty, s"no job ran as '$label'")
+        runs.foreach { case (job, start, end) =>
+          assert(end.exists(e => start <= returned && e <= returned),
+            s"job $job as '$label' ran [$start, $end]; compile returned at $returned")
+        }
+        out
+      } finally sc.removeSparkListener(listener)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      // an in-memory, exchange-free input: only a job of the boundary's
-      // own can materialize it under the label
-      val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2L, "spam spam spam spam spam spam spam spam")).toDF("doc_id", "text")
-      val out = graft.dsl.CuratePipeline.compile(docs,
+    // an in-memory, exchange-free input: only a job of the boundary's
+    // own can materialize it under the label
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "spam spam spam spam spam spam spam spam")).toDF("doc_id", "text")
+    val out = checkLabel("curate: repetition_filter input checkpoint")(
+      graft.dsl.CuratePipeline.compile(docs,
         """{"stages": [{"op": "repetition_filter", "max_dup_gram_frac": 0.5,
-            "min_distinct_ratio": 0.5}]}""")
-      val returned = System.currentTimeMillis()
-      assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L))
-      // the listener bus is asynchronous — settle
-      var tries = 0
-      def runs = labelled.asScala.toMap.map { case (j, t) => (j, t, ends.asScala.get(j)) }
-      while ((runs.isEmpty || runs.exists(_._3.isEmpty)) && tries < 50) {
-        Thread.sleep(100); tries += 1
-      }
-      assert(runs.nonEmpty, s"no job ran as '$label'")
-      runs.foreach { case (job, start, end) =>
-        assert(end.exists(e => start <= returned && e <= returned),
-          s"job $job as '$label' ran [$start, $end]; compile returned at $returned")
-      }
-    } finally sc.removeSparkListener(listener)
+            "min_distinct_ratio": 0.5}]}"""))
+    assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L))
+    // pack's prefix scan samples its range bounds and then shuffles:
+    // its input, the tokenize encode, is checkpointed so it runs once
+    checkLabel("curate: pack input checkpoint")(
+      graft.dsl.CuratePipeline.compile(graft.queries.QueriesData.fineWebSeed(spark, sf),
+        graft.queries.QueriesData.fineWebSpec))
   }
 
   // ------------------------------------------------------------- urls

@@ -5,10 +5,8 @@ Usage: merge_bench.py out.json sweep1.json sweep2.json [...]
 
 Per-query time = min over sweeps where the query succeeded (null = that
 sweep failed it; a query failed in EVERY sweep stays null and is listed
-in "failed"). "runs" concatenates every sweep's samples. The
-"fineweb_stages" object — dropped by hand-merges before r16 — is
-carried through as the ELEMENT-WISE min across sweeps that report it,
-matching the per-query stance. Total = sum of merged per-query times.
+in "failed"). "runs" concatenates every sweep's samples. Total = sum
+of merged per-query times.
 """
 import json
 import sys
@@ -47,17 +45,6 @@ def main() -> None:
         "failed": failed,
     }
 
-    stage_maps = [s["fineweb_stages"] for s in sweeps
-                  if isinstance(s.get("fineweb_stages"), dict)]
-    if stage_maps:
-        stage_names: list[str] = []
-        for m in stage_maps:
-            for k in m:
-                if k not in stage_names:
-                    stage_names.append(k)
-        merged["fineweb_stages"] = {
-            k: min(m[k] for m in stage_maps if k in m) for k in stage_names}
-
     sfs = {s.get("sf") for s in sweeps}
     merged["sf"] = sweeps[0].get("sf") if len(sfs) == 1 else sorted(
         str(x) for x in sfs)
@@ -66,8 +53,7 @@ def main() -> None:
         json.dump(merged, f)
         f.write("\n")
     print(f"merged {len(ins)} sweeps -> {out_path}: "
-          f"{len(names)} queries, total {merged['value']:.1f}s, "
-          f"fineweb_stages={'yes' if stage_maps else 'no'}")
+          f"{len(names)} queries, total {merged['value']:.1f}s")
 
 
 if __name__ == "__main__":

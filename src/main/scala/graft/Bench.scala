@@ -12,14 +12,20 @@ package graft
   *    numbers are per-query reproducible.
   */
 object Bench {
+  /** Drops every cached frame and persisted RDD of `spark`'s context.
+    * A checkpointed RDD is left to the ContextCleaner: unpersisting a
+    * locally checkpointed one would delete the blocks its frame still
+    * reads. */
+  def sweepCaches(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.filterNot(_.isCheckpointed)
+      .foreach(_.unpersist(blocking = false))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.localCores
     val spark = GraftSession.build()
-    def sweepCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     // untimed warmup: JIT + codegen + parquet reader paths, so the
     // alphabetically-first query doesn't absorb JVM cold-start
     try {
@@ -44,7 +50,7 @@ object Bench {
     // the whole sweep to poison both.
     val samples: Seq[Seq[(Double, Boolean)]] = (1 to passes).map { _ =>
       queries.map { case (name, fn) =>
-        sweepCaches()
+        sweepCaches(spark)
         val t0 = System.nanoTime()
         val ok = try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -67,7 +73,7 @@ object Bench {
       val ts = base.map(_._1)
       val noisy = ok && ts.size >= 2 && ts.min > 0.1 && ts.max / ts.min > 3.0
       val all = if (noisy) {
-        sweepCaches()
+        sweepCaches(spark)
         val t0 = System.nanoTime()
         val ok3 = try {
           queries(i)._2(spark, sfDir).write.format("noop").mode("overwrite").save(); true
@@ -76,7 +82,7 @@ object Bench {
       } else ts
       (queries(i)._1, all, ok)
     }
-    sweepCaches()
+    sweepCaches(spark)
     // a failed query must not masquerade as a fast success: its time is
     // null in the full record, excluded from the total, and listed in
     // "failed". The STDOUT line is the compact record: total, query and

@@ -15,8 +15,7 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       // sweep caches so one operator's persist can't pressure the next query
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Bench.sweepCaches(spark)
       try {
         // Presentation normalization for the DuckDB compare (BASELINE.md):
         // session-TZ is UTC, so casting LTZ timestamps to NTZ keeps the

@@ -447,8 +447,8 @@ object CuratePipeline {
         // percentile of `column` from the md5-sampled quantile sketch
         // (a picked real value, exactly replayable), not a hand-tuned
         // constant — "drop the shortest 10%" stays calibrated as the
-        // corpus drifts. The one-row threshold rides as a broadcast
-        // frame, never a driver action.
+        // corpus drifts. The sample ranks on the prefix scan (its jobs
+        // run here); the one-row threshold rides as a broadcast frame.
         val column = str(st, "column")
         val q = dbl(st, "q", -1.0)
         if (q <= 0.0 || q > 1.0)
@@ -731,16 +731,16 @@ object CuratePipeline {
         // at `merges_path` — the trained-vocab handoff); `algo:
         // wordpiece` greedy-longest-matches against a fixed `pieces`
         // array. Either way the id vocabulary is corpus-relative
-        // (characters ranked over the CURRENT stage input + the
-        // pieces/products, like the other model-based stages); encode
-        // itself is a map-only codegen pass, and the vocab rides as a
-        // driver-bounded broadcast literal (alphabet + piece count).
+        // (the CURRENT stage input's characters + the pieces/products,
+        // like the other model-based stages): one job collects the
+        // distinct characters, the driver numbers them and the pieces
+        // (alphabet + piece count, bounded by construction), and the
+        // map rides into encode, a map-only codegen pass.
         val lower = bool(st, "lower", default = true)
         val ids = strOr(st, "algo", "bpe") match {
           case "bpe" =>
             val merges = mergesOf(st)
-            val vocabIds = graft.operators.Bpe.vocab(df, textCol, merges, lower)
-              .collect().map(r => r.getString(1) -> r.getLong(0)).toMap
+            val vocabIds = graft.operators.Bpe.vocabIds(df, textCol, merges, lower)
             graft.operators.Bpe
               .encodeIds(df, textCol, idCol, merges, vocabIds, lower)
               .select(col("doc_id").as(idCol), col("token_ids"),
@@ -749,9 +749,7 @@ object CuratePipeline {
             val pieces = strSeq(st, "pieces", Nil)
             if (pieces.isEmpty) throw new DslException(
               "tokenize: algo wordpiece needs a non-empty 'pieces' array")
-            val vocabIds = graft.operators.Wordpiece
-              .vocab(df, textCol, pieces, lower)
-              .collect().map(r => r.getString(1) -> r.getLong(0)).toMap
+            val vocabIds = graft.operators.Wordpiece.vocabIds(df, textCol, pieces, lower)
             graft.operators.Wordpiece
               .encodeIds(df, textCol, idCol, pieces, vocabIds, lower)
               .select(col("doc_id").as(idCol), col("token_ids"),
@@ -820,9 +818,7 @@ object CuratePipeline {
             // stable ids, same contract as any other piece
             val idPieces = weighted.map(_._1) ++ art.byteScores.toSeq
               .flatMap(_ => (0 until 256).map(b => f"<0x$b%02X>"))
-            val vocabIds = graft.operators.Wordpiece
-              .vocab(df, textCol, idPieces, lower)
-              .collect().map(r => r.getString(1) -> r.getLong(0)).toMap
+            val vocabIds = graft.operators.Wordpiece.vocabIds(df, textCol, idPieces, lower)
             graft.operators.Unigram
               .encodeIds(df, textCol, idCol, weighted, unk, vocabIds, lower,
                 boundary, art.byteScores)

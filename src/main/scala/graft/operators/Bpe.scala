@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextExprs
 
 /** Distributed byte-pair-encoding primitives — the tokenizer-training
@@ -212,44 +213,43 @@ object Bpe {
   /** The vocabulary artifact a trained tokenizer ships: base symbols
     * (every distinct character of the corpus's words) followed by the
     * merge products, with stable ids — characters take 0..C-1 in
-    * lexicographic order, merge `rank` takes C+rank. Output:
-    * (token_id, symbol, kind ∈ {char, merge}).
-    *
-    * The distinct-character set is tiny (≤ alphabet size — thousands
-    * of rows even for CJK corpora) so the ranking window over it is
-    * driver-scale by construction; the corpus pass that feeds it is
-    * the same one-shuffle distinct the word table uses. */
+    * Spark's string order, merge `rank` takes C+rank. Output:
+    * (token_id, symbol, kind ∈ {char, merge}). */
   def vocab(df: DataFrame, textCol: String,
-      merges: Seq[(String, String)], lower: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    // per-doc distinct chars via one kernel pass: the corpus-wide
-    // distinct explodes ~alphabet-size rows per doc, not one per char
-    // materialize the distinct set once (driver-scale by construction:
-    // ≤ alphabet size) — the ranked projection AND the count below both
-    // read the checkpoint, so the corpus is scanned exactly once
-    val chars = df
-      .select(explode(TextExprs.distinct_chars(col(textCol), lower)).as("symbol"))
-      .distinct()
-      .transform(Materialize.checkpoint(_))
-    // bounded set (distinct characters): a global rank here is safe
-    val ranked = chars.withColumn("token_id",
-      (row_number().over(Window.orderBy(col("symbol"))) - 1).cast("long"))
-      .select(col("token_id"), col("symbol"), lit("char").as("kind"))
-    if (merges.isEmpty) ranked
-    else {
-      // the char count stays a PLAN NODE (one-row frame broadcast under
-      // the merge rows) instead of a driver action — vocab() issues no
-      // job beyond the checkpoint itself (the NbClassifier stance)
-      val nChars = chars.agg(count(lit(1)).cast("long").as("__n"))
-      import spark.implicits._
-      val mergeRows = merges.zipWithIndex
-        .map { case ((l, r), i) => (l + r, i.toLong) }
-        .toDF("symbol", "__rk")
-      ranked.unionByName(mergeRows.crossJoin(broadcast(nChars))
-        .select((col("__n") + col("__rk")).as("token_id"), col("symbol"),
-          lit("merge").as("kind")))
-    }
+      merges: Seq[(String, String)], lower: Boolean = true): DataFrame =
+    vocabFrame(df.sparkSession, vocabEntries(df, textCol, merges, lower))
+
+  /** [[vocab]] as the symbol → token_id map [[encodeIds]] takes */
+  def vocabIds(df: DataFrame, textCol: String,
+      merges: Seq[(String, String)], lower: Boolean = true): Map[String, Long] =
+    vocabEntries(df, textCol, merges, lower).map(e => e._2 -> e._1).toMap
+
+  private def vocabEntries(df: DataFrame, textCol: String,
+      merges: Seq[(String, String)], lower: Boolean): Seq[(Long, String, String)] =
+    charsThen(df, textCol, lower, "merge")(_ => merges.map { case (l, r) => l + r })
+
+  /** (token_id, symbol, kind) of a corpus-relative vocabulary: the
+    * distinct characters of the corpus's words take 0..C-1 in Spark's
+    * string order (UTF-8 bytes, that is code points — not Java's UTF-16
+    * `String` order, which puts U+1F600 before U+FF21), then the
+    * symbols `more` derives from them take C+i as `kind`. One job: a
+    * per-doc distinct-char kernel and one distinct shuffle; the set is
+    * bounded by the alphabet (thousands of rows even for CJK corpora),
+    * so it is collected and numbered on the driver. */
+  private[operators] def charsThen(df: DataFrame, textCol: String, lower: Boolean,
+      kind: String)(more: Seq[String] => Seq[String]): Seq[(Long, String, String)] = {
+    val chars = df.select(explode(TextExprs.distinct_chars(col(textCol), lower)))
+      .distinct().collect().map(_.getString(0)).toSeq
+      .sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+    chars.zipWithIndex.map { case (c, i) => (i.toLong, c, "char") } ++
+      more(chars).zipWithIndex.map { case (m, i) => ((chars.size + i).toLong, m, kind) }
+  }
+
+  /** a vocabulary's (token_id, symbol, kind) rows as a frame */
+  private[operators] def vocabFrame(spark: SparkSession,
+      entries: Seq[(Long, String, String)]): DataFrame = {
+    import spark.implicits._
+    entries.toDF("token_id", "symbol", "kind")
   }
 
   /** Encode every document against a fixed merge table: map-only, one

@@ -103,14 +103,13 @@ object ByteBpe {
     * row per product at 256+rank. Closed-form: no corpus pass. */
   def vocab(spark: org.apache.spark.sql.SparkSession,
       merges: Seq[(String, String)]): DataFrame = {
-    import spark.implicits._
     val base = (0 until 256).map { b =>
       (b.toLong, ByteBpeExprs.byteToChar(b).toString, "byte")
     }
     val prods = merges.zipWithIndex.map { case ((l, r), i) =>
       (256L + i, l + r, "merge")
     }
-    (base ++ prods).toDF("token_id", "symbol", "kind")
+    Bpe.vocabFrame(spark, base ++ prods)
   }
 
   // ----------------- published GPT-2 artifact interop (r15)

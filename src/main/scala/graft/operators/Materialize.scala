@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -59,14 +60,27 @@ object Materialize {
   }
 
   /** Whether `spark` checkpoints reliably; reliable mode also points
-    * the context at `spark.graft.checkpoint.dir`. */
+    * the context at `spark.graft.checkpoint.dir`. The context's dir is
+    * global to it and set once, so a session whose dir differs from
+    * the one the context already writes under is an error, not a
+    * silent redirect. */
   private def reliable(spark: SparkSession): Boolean =
     spark.conf.get("spark.graft.checkpoint.mode", "local") match {
       case "reliable" =>
         val dir = spark.conf.getOption("spark.graft.checkpoint.dir").getOrElse(
           throw new IllegalArgumentException("spark.graft.checkpoint.mode=reliable " +
             "needs spark.graft.checkpoint.dir, a cluster-visible path"))
-        if (spark.sparkContext.getCheckpointDir.isEmpty) spark.sparkContext.setCheckpointDir(dir)
+        val sc = spark.sparkContext
+        sc.getCheckpointDir match {
+          case None => sc.setCheckpointDir(dir)
+          case Some(current) =>
+            // the context writes under <its dir>/<uuid>
+            val (parent, wanted) = (new Path(current).getParent, new Path(dir))
+            if (parent != wanted.getFileSystem(sc.hadoopConfiguration).makeQualified(wanted))
+              throw new IllegalArgumentException(s"spark.graft.checkpoint.dir is " +
+                s"'$dir', but this context already checkpoints under '$parent'; " +
+                "one context takes one reliable checkpoint dir")
+        }
         true
       case "local" => false
       case other => throw new IllegalArgumentException(

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.TextExprs
 
@@ -48,14 +48,6 @@ import graft.functions.TextExprs
   * '\s+')` non-empty), so oracle replays are exact.
   */
 object NgramLm {
-
-  /** Above this many rows in one language, the per-language
-    * `percent_rank` window of [[pplBuckets]] (and its quantile sketch)
-    * raises a named error instead of silently single-tasking that
-    * language. The guard is a `row_number` over the same window (one
-    * extra function in the same pass, no extra shuffle), so it costs
-    * nothing and fires at execution time with the actual row count. */
-  val MaxLangRows: Long = 10000000L
 
   /** pruned gram-count tables of one model; c3 is null for order 2 */
   private final case class Counts(
@@ -209,23 +201,26 @@ object NgramLm {
     * High Quality Monolingual Datasets"): per-LANGUAGE perplexity
     * bands — head (most fluent third), middle, tail.
     *
-    * DEFAULT = the scale-safe sampled-threshold path: band EDGES come
-    * from an md5-sampled per-language quantile sketch (the
+    * DEFAULT = the sampled-threshold path: band EDGES come from an
+    * md5-sampled per-language quantile sketch (the
     * [[Sketches.quantileSample]] keep contract — hash48(doc_id,salt)
-    * under `ratePerM`/1M), so the only per-language sort runs over the
-    * BOUNDED sample and the thresholds broadcast back as buckets−1
-    * rows per language. No partition ever holds a language's full
-    * corpus — the r15-flagged 40 TB-single-partition shape is gone.
-    * The threshold row is the sample's (ppl, doc_id) order statistic
-    * at rank ⌈i·n/buckets⌉; a document lands ABOVE threshold i iff
-    * (ppl, doc_id) > (t_ppl, t_doc) lexicographically, so the sketch
-    * path converges to the exact banding as ratePerM → 1M and the
-    * whole contract replays bit-identically in SQL.
+    * under `ratePerM`/1M), ranked by the prefix scan
+    * ([[Sampling.orderStatistics]]), and broadcast back as buckets−1
+    * rows per language. The threshold row is the sample's (ppl, doc_id)
+    * order statistic at rank ⌈i·n/buckets⌉; a document lands ABOVE
+    * threshold i iff (ppl, doc_id) > (t_ppl, t_doc) lexicographically,
+    * so the sketch path converges to the exact banding as ratePerM →
+    * 1M and the whole contract replays bit-identically in SQL. A
+    * document whose language is NULL, or has an empty sample, lands in
+    * bucket 0 (fail-open).
     *
-    * `exact = true` restores percent_rank-within-language (ties broken
-    * by doc_id) — but behind a loud width guard ([[MaxLangRows]]): a
-    * language partition wider than `maxLangRows` raises a named error
-    * instead of silently single-tasking 40% of the corpus.
+    * `exact = true` is percent_rank within the language, ordered by
+    * (ppl, doc_id): (rank − 1)/(n − 1), 0 for a one-row language, with
+    * rank and n from the same scan ([[Sampling.withRank]]) — a language
+    * of any size ranks in parallel, no row cap.
+    *
+    * Both paths rank by (ppl, doc_id), a total order because doc ids
+    * are unique, the contract of every id-keyed stage.
     *
     * Returns (doc_id, lang, n_tokens, ppl, bucket ∈ [0, buckets),
     * band ∈ {head, middle, tail}). */
@@ -234,77 +229,50 @@ object NgramLm {
       train: Option[DataFrame] = None, alpha: Double = 0.4,
       minCount: Long = 1, order: Int = 2,
       exact: Boolean = false, ratePerM: Int = 250000,
-      salt: String = "ppl-band-v1",
-      maxLangRows: Long = MaxLangRows): DataFrame = {
+      salt: String = "ppl-band-v1"): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     require(ratePerM > 0 && ratePerM <= 1000000,
       s"pplBuckets: ratePerM must be in (0, 1000000], got $ratePerM")
-    import org.apache.spark.sql.expressions.Window
     val scored = perplexity(df, textCol, idCol, train, None, alpha,
       minCount, order)
-    val p = df.select(col(idCol).as("doc_id"), col(langCol))
+    // the scored corpus is read twice on either path (the scan's range
+    // bounds and its rows; the threshold sketch and the final join) —
+    // materialize it once (the CURATE stage-boundary stance) so the LM
+    // scoring pass, the dominant cost, never runs twice
+    val pc = df.select(col(idCol).as("doc_id"), col(langCol))
       .join(scored, Seq("doc_id"))
+      .transform(Materialize.checkpoint(_))
+    val rankOrder = Seq(col("ppl"), col("doc_id"))
     val withBucket =
       if (exact) {
-        val w = Window.partitionBy(col(langCol))
-          .orderBy(col("ppl"), col("doc_id"))
-        // row_number over the same window = zero-cost width guard
-        p.withColumn("bucket",
-          when(row_number().over(w) > maxLangRows,
-            raise_error(lit(s"pplBuckets: language partition exceeds " +
-              s"$maxLangRows rows; use the sampled-threshold default " +
-              "(exact = false), the 100 TB path")))
-            .otherwise(least(
-              floor(percent_rank().over(w) * buckets), lit(buckets - 1))
-              .cast(org.apache.spark.sql.types.LongType)))
+        // Spark's percent_rank arithmetic, so the buckets replay in SQL
+        val pr = when(col("__n") > 1,
+          (col("__rank") - 1).cast(DoubleType) / (col("__n") - 1).cast(DoubleType))
+          .otherwise(lit(0.0))
+        Sampling.withRank(pc, Seq(col(langCol)), rankOrder)
+          .withColumn("bucket", least(floor(pr * buckets), lit(buckets - 1))
+            .cast(LongType))
       } else {
-        // the scored corpus feeds BOTH the threshold sketch and the
-        // final broadcast join — materialize it once (the CURATE
-        // stage-boundary stance) so the LM scoring pass, the dominant
-        // cost, never runs twice
-        val pc = p.transform(Materialize.checkpoint(_))
-        // 1. bounded sample — pure (doc_id, salt) keep decision, so
-        //    the sample (and every band edge) replays in SQL
+        // 1. sample — pure (doc_id, salt) keep decision, so the sample
+        //    (and every band edge) replays in SQL
         val samp = pc.filter(
           Sampling.hashBucket(col("doc_id"), salt, 1000000) < ratePerM)
-        // 2. per-language order statistics over the SAMPLE only: the
-        //    window partitions by language but its input is the
-        //    bounded sketch, never the corpus. The sketch is only
-        //    bounded if ratePerM is SIZED for the corpus — the same
-        //    loud width guard as the exact path rides the same
-        //    row_number, so an under-sized rate raises instead of
-        //    silently single-tasking a 25%-of-40TB "sample"
-        val wRank = Window.partitionBy(col(langCol))
-          .orderBy(col("ppl"), col("doc_id"))
-        val wCnt = Window.partitionBy(col(langCol))
-        val thr = samp
-          .select(col(langCol), col("ppl"), col("doc_id"),
-            when(row_number().over(wRank) > maxLangRows,
-              raise_error(lit(s"pplBuckets: a language's SAMPLE exceeds " +
-                s"$maxLangRows rows — lower ratePerM so the quantile " +
-                "sketch stays a bounded artifact (the 100 TB contract)")))
-              .otherwise(row_number().over(wRank)).as("rn"),
-            count(lit(1)).over(wCnt).as("n"))
-          .select(col(langCol), col("ppl"), col("doc_id"),
-            col("rn"), col("n"),
-            explode(array((1 until buckets).map(lit(_)): _*)).as("qi"))
-          .filter(col("rn") === greatest(lit(1L),
-            ceil(col("qi") * col("n") / lit(buckets))))
+        // 2. per-language order statistics over the sample
+        val thr = Sampling.orderStatistics(samp.select(col(langCol), col("ppl"),
+            col("doc_id")), Seq(col(langCol)), rankOrder,
+            (1 until buckets).map(lit(_)))((qi, n) => ceil(qi * n / lit(buckets)))
           .groupBy(col(langCol))
-          .agg(sort_array(collect_list(struct(col("qi"),
+          .agg(sort_array(collect_list(struct(col("__pick").as("qi"),
             col("ppl").as("t_ppl"), col("doc_id").as("t_doc"))))
             .as("__thrs"))
         // 3. thresholds broadcast back (buckets−1 rows per language);
-        //    bucket = how many edges this doc's (ppl, doc_id) exceeds.
-        //    A language with an empty sample (impossible at real
-        //    corpus sizes × sane rates) degrades to one band, never
-        //    to an error — the filter keep is fail-open.
+        //    bucket = how many edges this doc's (ppl, doc_id) exceeds
         pc.join(broadcast(thr), Seq(langCol), "left")
           .withColumn("bucket", coalesce(
             size(filter(col("__thrs"), t =>
               col("ppl") > t("t_ppl") ||
                 (col("ppl") === t("t_ppl") && col("doc_id") > t("t_doc")))),
-            lit(0)).cast(org.apache.spark.sql.types.LongType))
+            lit(0)).cast(LongType))
           .drop("__thrs")
       }
     withBucket

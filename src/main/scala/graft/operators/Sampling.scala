@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RelationBridge
 import org.apache.spark.sql.types.LongType
 
 /** Deterministic dataset splitting for training pipelines: the split a
@@ -43,60 +48,107 @@ object Sampling {
     df.orderBy(hashBucket(col(keyCol), s"epoch-$epoch", 1 << 30), col(keyCol))
 
   /** `df` plus a long column `out`: the exact EXCLUSIVE prefix sum of
-    * `value` (NULL counts as 0) in `order`, restarting per `shardCol`
-    * when one is given — the one scan behind [[packSequences]],
-    * [[packTokenIds]] and [[tokenBudgetSample]]. Two passes over one
-    * range partitioning, no single-task step over the rows at any
-    * scale and no row cap:
+    * `value` (NULL counts as 0) in `order`, restarting per `shard` value
+    * (NULL is a shard; no shard = one scan over all rows); with `total`,
+    * also a long column of that name holding the row's whole shard sum.
+    * The one scan behind [[packSequences]], [[packTokenIds]],
+    * [[tokenBudgetSample]] and, with value 1, every rank over rows
+    * ([[withRank]], [[orderStatistics]]). Two passes over one range
+    * partitioning, no single-task step over the rows at any scale and
+    * no row cap:
     *  1. rows range-partition on `shard ++ order` and sort within each
     *     partition, fixed once behind a checkpoint (every plan over a
     *     bare `repartitionByRange` samples its own bounds, so two reads
     *     of it could disagree);
     *  2. each run of one shard within a partition sums to one row;
     *     those ≤ partitions + shards sums go to the driver, become
-    *     exclusive offsets per shard and broadcast back, and one
-    *     map-side pass adds each row's running sum within its run to
-    *     the run's offset.
-    * The result does not depend on the input's partitioning. `order`
-    * must be total: tied rows take an arbitrary order among
-    * themselves, as in any scan. */
-  private def withExclusivePrefixSum(df: DataFrame, value: Column,
-      order: Seq[Column], shardCol: Option[String], out: String): DataFrame = {
-    val keys = shardCol.map(col).toSeq ++ order
+    *     exclusive offsets and shard totals, and broadcast back, and
+    *     one map-side pass adds each row's running sum within its run
+    *     to the run's offset.
+    * Both passes read Catalyst rows (`queryExecution.toRdd`) and pass 2
+    * hands them back through [[RelationBridge.ofInternalRows]], so no
+    * row converts to an external `Row`. The result does not depend on
+    * the input's partitioning. `order` must be total within a shard:
+    * tied rows take an arbitrary order among themselves, as in any
+    * scan. */
+  private[operators] def withExclusivePrefixSum(df: DataFrame, value: Column,
+      order: Seq[Column], shard: Seq[Column], out: String,
+      total: Option[String] = None): DataFrame = {
+    val keys = shard ++ order
     val ranged = Materialize.checkpoint(df.repartitionByRange(keys: _*)
       .sortWithinPartitions(keys: _*)
       .withColumn("__v", coalesce(value.cast("long"), lit(0L))))
-    // a run: consecutive rows of one shard in a partition (NULL is a shard)
-    def sameShard(a: Any, b: Any): Boolean = java.util.Objects.deepEquals(a, b)
+      .withColumn("__s", struct(shard: _*))
+    // a run: consecutive rows of one shard in a partition. A shard is
+    // the `__s` struct, an UnsafeRow that equals another by its bytes
+    // (NULL fields included); it points into its row, so a kept one is
+    // copied
+    val nShard = shard.size
     // pass 1: (partition, shard, sum) of every run, in partition order —
     // that is, in (shard, order) order
-    val runs = ranged.select(shardCol.fold(lit(null))(col), col("__v")).rdd
+    val runs = ranged.select(col("__s"), col("__v")).queryExecution.toRdd
       .mapPartitionsWithIndex { (p, rows) =>
-        val sums = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long)]
+        val sums = ArrayBuffer.empty[(Int, InternalRow, Long)]
         rows.foreach { r =>
-          if (sums.isEmpty || !sameShard(sums.last._2, r.get(0))) sums += ((p, r.get(0), 0L))
+          val s = r.getStruct(0, nShard)
+          if (sums.isEmpty || sums.last._2 != s) sums += ((p, s.copy(), 0L))
           sums(sums.length - 1) = sums.last.copy(_3 = sums.last._3 + r.getLong(1))
         }
         sums.iterator
       }.collect()
     val offsets = new Array[Long](runs.length)
-    for (i <- 1 until runs.length) if (sameShard(runs(i - 1)._2, runs(i)._2))
+    for (i <- 1 until runs.length) if (runs(i - 1)._2 == runs(i)._2)
       offsets(i) = offsets(i - 1) + runs(i - 1)._3
+    // a shard's total: its last run's offset plus that run's sum
+    val totals = new Array[Long](runs.length)
+    for (i <- runs.indices.reverse) totals(i) =
+      if (i + 1 < runs.length && runs(i + 1)._2 == runs(i)._2) totals(i + 1)
+      else offsets(i) + runs(i)._3
     val byPart = df.sparkSession.sparkContext.broadcast(
-      runs.map(_._1).zip(offsets).groupMap(_._1)(_._2))
+      runs.indices.groupMap(runs(_)._1)(i => (offsets(i), totals(i))))
     // pass 2: a row's sum is its run's offset plus the run's rows before it
-    val (sIdx, vIdx) = (shardCol.map(ranged.schema.fieldIndex), ranged.schema.fieldIndex("__v"))
-    val scanned = ranged.rdd.mapPartitionsWithIndex { (p, rows) =>
-      var (run, shard, acc) = (-1, null: Any, 0L)
-      rows.map { r =>
-        val sh = sIdx.map(r.get).orNull
-        if (run < 0 || !sameShard(shard, sh)) { run += 1; shard = sh; acc = byPart.value(p)(run) }
-        acc += r.getLong(vIdx)
-        Row.fromSeq(r.toSeq :+ (acc - r.getLong(vIdx)))
-      }
+    val (sIdx, vIdx) = (ranged.schema.fieldIndex("__s"), ranged.schema.fieldIndex("__v"))
+    // (out, total) rides next to each row, which the frame's scan copies
+    val scanned = ranged.queryExecution.toRdd.mapPartitionsWithIndex[InternalRow] {
+      (p, rows) =>
+        var (run, shardKey, acc) = (-1, null: InternalRow, 0L)
+        val sums = new GenericInternalRow(2)
+        val joined = new JoinedRow
+        rows.map { r =>
+          val s = r.getStruct(sIdx, nShard)
+          if (run < 0 || shardKey != s) {
+            run += 1; shardKey = s.copy(); acc = byPart.value(p)(run)._1
+            sums.setLong(1, byPart.value(p)(run)._2)
+          }
+          sums.setLong(0, acc)
+          acc += r.getLong(vIdx)
+          joined(r, sums)
+        }
     }
-    df.sparkSession.createDataFrame(scanned, ranged.schema.add(out, LongType)).drop("__v")
+    val schema = ranged.schema.add(out, LongType).add(total.getOrElse("__t"), LongType)
+    RelationBridge.ofInternalRows(df.sparkSession, scanned, schema).drop("__v", "__s", "__t")
   }
+
+  /** `df` plus `__rank`, the 1-based rank of each row in `order` within
+    * its `group`, and `__n`, the group's row count: the prefix scan
+    * with value 1, whose exclusive count is the row number − 1.
+    * `order` must be total within a group. */
+  private[operators] def withRank(df: DataFrame, group: Seq[Column],
+      order: Seq[Column]): DataFrame =
+    withExclusivePrefixSum(df, lit(1L), order, group, "__rank", Some("__n"))
+      .withColumn("__rank", col("__rank") + 1)
+
+  /** Order statistics of every `group`: for each pick p, the row at
+    * rank max(1, `rankAt(p, n)`) in `order`, n being the group's row
+    * count; the pick rides along as `__pick`. One [[withRank]] scan,
+    * so a group of any size ranks in parallel. */
+  private[operators] def orderStatistics(df: DataFrame, group: Seq[Column],
+      order: Seq[Column], picks: Seq[Column])(
+      rankAt: (Column, Column) => Column): DataFrame =
+    withRank(df, group, order)
+      .withColumn("__pick", explode(array(picks: _*)))
+      .filter(col("__rank") === greatest(lit(1L), rankAt(col("__pick"), col("__n"))))
+      .drop("__rank", "__n")
 
   /** Sequence packing: assign rows to token-budgeted batches by a scan
     * over a deterministic order — batch_id = floor(exclusive running
@@ -113,7 +165,8 @@ object Sampling {
       budget: Long, shardCol: Option[String] = None): DataFrame = {
     require(budget > 0, "token budget must be positive")
     // `div` = exact integer division on the exact long sums
-    withExclusivePrefixSum(df, col(tokenCol), Seq(col(orderCol)), shardCol, "batch_id")
+    withExclusivePrefixSum(df, col(tokenCol), Seq(col(orderCol)), shardCol.map(col).toSeq,
+        "batch_id")
       .withColumn("batch_id",
         when(col(tokenCol).isNotNull, expr(s"batch_id div $budget")))
   }
@@ -153,7 +206,7 @@ object Sampling {
       case None => nonNull
     }
     val withOff = withExclusivePrefixSum(src, size(col(idsCol)),
-      Seq(col(orderCol)), shardCol, "__off")
+      Seq(col(orderCol)), shardCol.map(col).toSeq, "__off")
     val shardKeep = shardCol.map(col).toSeq
     // the document offset rides through the explode ONLY when segment
     // ids were asked for: 8 unused bytes per token through the pack
@@ -212,7 +265,8 @@ object Sampling {
       salt: String, budget: Long, shardCol: Option[String] = None): DataFrame = {
     require(budget > 0, "token budget must be positive")
     val h = hashBucket(col(keyCol), salt, buckets = 1 << 30)
-    withExclusivePrefixSum(df, col(tokenCol), Seq(h, col(keyCol)), shardCol, "keep")
+    withExclusivePrefixSum(df, col(tokenCol), Seq(h, col(keyCol)), shardCol.map(col).toSeq,
+      "keep")
       .withColumn("keep", col("keep") < budget)
   }
 

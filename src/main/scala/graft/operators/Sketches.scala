@@ -213,8 +213,7 @@ object Sketches {
     * merge by plain union (sample-of-union = union-of-samples) and the
     * sketch replays bit-identically in SQL — unlike `approx_percentile`
     * (GK internals) or reservoir sampling (arrival-order dependent).
-    * Estimate error is the binomial sampling error ~1/√(q·n·rate);
-    * size the rate so the expected sample fits one partition. */
+    * Estimate error is the binomial sampling error ~1/√(q·n·rate). */
   def quantileSample(df: DataFrame, keyCol: String, valueCol: String,
       ratePerM: Int = 10000): QuantileSketch = {
     require(ratePerM > 0 && ratePerM <= 1000000,
@@ -229,48 +228,39 @@ object Sketches {
   /** Type-1 (lower) quantile estimates over the sample: the value at
     * sorted rank ⌈q·n⌉ for each requested q — picked values, never
     * interpolated, so the estimate is a real data value and replays
-    * exactly. The rank window is single-partition BY DESIGN: the sample
-    * is the sketch's bounded artifact (like the k-means codebooks),
-    * sized by `ratePerM`, not the data. */
-  def quantileEstimate(sketch: QuantileSketch, qs: Seq[Double]): DataFrame = {
-    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
-      s"quantile: qs must be in (0, 1], got $qs")
-    import org.apache.spark.sql.expressions.Window
-    sketch.sample
-      .select(col("v"),
-        row_number().over(Window.orderBy("v")).as("rn"),
-        count(lit(1)).over(Window.partitionBy()).as("n"))
-      .select(col("v"), col("rn"), col("n"),
-        explode(array(qs.map(lit(_)): _*)).as("q"))
-      .filter(col("rn") === greatest(lit(1L), ceil(col("q") * col("n"))))
-      .select(col("q"), col("v").as("est"))
-  }
+    * exactly. The sample ranks on the prefix scan
+    * ([[Sampling.orderStatistics]]), so a sample of any size ranks in
+    * parallel. An empty sample gives no rows. */
+  def quantileEstimate(sketch: QuantileSketch, qs: Seq[Double]): DataFrame =
+    quantiles(sketch.sample, Nil, qs)
 
   /** Per-group quantiles in ONE pass over a grouped sample: the same
-    * md5 keep decision, but the rank window partitions by the group
-    * columns — every group's sample ranks inside its own partition, so
-    * there is NO single-partition stage and the pattern holds at any
-    * group count (per-language length percentiles over 100 TB: one
-    * sample filter + one window shuffle on the group key). */
+    * md5 keep decision and the same type-1 rule as [[quantileEstimate]],
+    * with the rank restarting per group — every group ranks on the
+    * same prefix scan, so there is no single-partition stage at any
+    * group count or group size (per-language length percentiles over
+    * 100 TB: one sample filter + one scan). */
   def groupedQuantiles(df: DataFrame, groupCols: Seq[String],
       keyCol: String, valueCol: String, qs: Seq[Double],
       ratePerM: Int = 10000): DataFrame = {
     require(groupCols.nonEmpty, "grouped quantiles: groupCols is empty")
     require(ratePerM > 0 && ratePerM <= 1000000,
       s"quantile: ratePerM must be in (0, 1000000], got $ratePerM")
+    val g = groupCols.map(col)
+    quantiles(df.filter(Sampling.hashBucket(checkedKey(keyCol, "quantile sample"),
+        "qsk-v1", 1000000) < ratePerM)
+      .select(g :+ col(valueCol).cast("double").as("v"): _*), g, qs)
+  }
+
+  /** (group…, q, est): the value at rank max(1, ⌈q·n⌉) of each group of
+    * `sample`'s `v` column */
+  private def quantiles(sample: DataFrame, g: Seq[Column],
+      qs: Seq[Double]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantile: qs must be in (0, 1], got $qs")
-    import org.apache.spark.sql.expressions.Window
-    val g = groupCols.map(col)
-    df.filter(Sampling.hashBucket(checkedKey(keyCol, "quantile sample"),
-        "qsk-v1", 1000000) < ratePerM)
-      .select(g :+ col(valueCol).cast("double").as("v"): _*)
-      .select(col("*"),
-        row_number().over(Window.partitionBy(g: _*).orderBy("v")).as("rn"),
-        count(lit(1)).over(Window.partitionBy(g: _*)).as("n"))
-      .select(col("*"), explode(array(qs.map(lit(_)): _*)).as("q"))
-      .filter(col("rn") === greatest(lit(1L), ceil(col("q") * col("n"))))
-      .select(g ++ Seq(col("q"), col("v").as("est")): _*)
+    Sampling.orderStatistics(sample, g, Seq(col("v")), qs.map(lit(_)))(
+        (q, n) => ceil(q * n))
+      .select(g ++ Seq(col("__pick").as("q"), col("v").as("est")): _*)
   }
 
   /** The HLL raw estimate: α·m²/Σ2^(−M_j), registers absent from the

@@ -90,33 +90,26 @@ object Wordpiece {
         col("e.n_syms").cast("long").as("n_wp_tokens"))
 
   /** The id vocabulary a WordPiece tokenizer ships: the corpus's
-    * distinct characters take 0..C−1 in lexicographic order (the char
+    * distinct characters take 0..C−1 in Spark's string order (the char
     * fallback is always encodable), the pieces take C+i — the same id
     * contract as [[Bpe.vocab]], with pieces in place of merge
     * products. Pieces already present as corpus characters (or
-    * repeated in the piece list) are dropped before id assignment —
-    * every symbol maps to EXACTLY one token_id, so the encodeIds map
-    * can never resolve a collision by collect order. The char count
-    * rides as a one-row broadcast frame, not a driver action (the
-    * [[NbClassifier]] action-diet stance). */
+    * repeated in the piece list) are dropped before id assignment and
+    * the rest numbered densely in list order — every symbol maps to
+    * EXACTLY one token_id. Output: (token_id, symbol, kind ∈ {char,
+    * piece}). */
   def vocab(df: DataFrame, textCol: String, pieces: Seq[String],
-      lower: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val chars = Bpe.vocab(df, textCol, Nil, lower).transform(Materialize.checkpoint(_))
-    val nChars = chars.agg(count(lit(1)).cast("long").as("__n"))
-    val pieceDf = pieces.distinct.zipWithIndex
-      .map { case (p, i) => (p, i.toLong) }.toDF("symbol", "__rk")
-      .join(chars.select(col("symbol")), Seq("symbol"), "left_anti")
-    // re-rank the survivors densely in original piece order (bounded
-    // driver-provided list: the single-partition window is fine)
-    val reranked = pieceDf.withColumn("__r2",
-      (row_number().over(Window.orderBy(col("__rk"))) - 1).cast("long"))
-    chars.unionByName(reranked.crossJoin(broadcast(nChars))
-      .select((col("__n") + col("__r2")).as("token_id"), col("symbol"),
-        lit("piece").as("kind")))
-  }
+      lower: Boolean = true): DataFrame =
+    Bpe.vocabFrame(df.sparkSession, vocabEntries(df, textCol, pieces, lower))
+
+  /** [[vocab]] as the symbol → token_id map [[encodeIds]] takes */
+  def vocabIds(df: DataFrame, textCol: String, pieces: Seq[String],
+      lower: Boolean = true): Map[String, Long] =
+    vocabEntries(df, textCol, pieces, lower).map(e => e._2 -> e._1).toMap
+
+  private def vocabEntries(df: DataFrame, textCol: String, pieces: Seq[String],
+      lower: Boolean): Seq[(Long, String, String)] =
+    Bpe.charsThen(df, textCol, lower, "piece")(chars => pieces.distinct.filterNot(chars.toSet))
 
   /** text → token ids: [[encode]]'s symbol stream mapped through the
     * [[vocab]] ids (same map-only id pass as [[Bpe.encodeIds]]; symbols

@@ -84,8 +84,7 @@ object QueriesData {
       val merges = Seq("e" -> "r", "t" -> "h", "th" -> "e",
         "i" -> "n", "a" -> "n", "an" -> "d")
       val docs = Tables.load(s, dir, "documents")
-      val vocabIds = graft.operators.Bpe.vocab(docs, "text", merges).collect()
-        .map(r => r.getString(1) -> r.getLong(0)).toMap
+      val vocabIds = graft.operators.Bpe.vocabIds(docs, "text", merges)
       val ids = graft.operators.Bpe.encodeIds(docs, "text", "doc_id", merges, vocabIds)
         .select(col("doc_id"), col("token_ids"))
       graft.operators.Sampling.packTokenIds(ids, "token_ids", "doc_id", seqLen = 64)
@@ -104,8 +103,7 @@ object QueriesData {
       val merges = Seq("e" -> "r", "t" -> "h", "th" -> "e",
         "i" -> "n", "a" -> "n", "an" -> "d")
       val docs = Tables.load(s, dir, "documents")
-      val vocabIds = graft.operators.Bpe.vocab(docs, "text", merges).collect()
-        .map(r => r.getString(1) -> r.getLong(0)).toMap
+      val vocabIds = graft.operators.Bpe.vocabIds(docs, "text", merges)
       val ids = graft.operators.Bpe.encodeIds(docs, "text", "doc_id", merges, vocabIds)
         .select(col("doc_id"), col("token_ids"))
       graft.operators.Sampling.packTokenIds(ids, "token_ids", "doc_id",
@@ -1000,8 +998,8 @@ object QueriesData {
     },
 
     // ---- grouped quantiles: per-language doc-length percentiles from
-    // one md5-sampled pass — the rank window partitions by the group,
-    // so no single-partition stage exists at any group count
+    // one md5-sampled pass — the ranks restart per group on the prefix
+    // scan, so no single-partition stage exists at any group count
     "q_grouped_quantile" -> { (s, dir) =>
       graft.operators.Sketches.groupedQuantiles(
           Tables.load(s, dir, "documents"), Seq("lang"),
@@ -1261,8 +1259,7 @@ object QueriesData {
       val merges = Seq("e" -> "r", "t" -> "h", "th" -> "e",
         "i" -> "n", "a" -> "n", "an" -> "d")
       val docs = Tables.load(s, dir, "documents")
-      val vocabIds = graft.operators.Bpe.vocab(docs, "text", merges).collect()
-        .map(r => r.getString(1) -> r.getLong(0)).toMap
+      val vocabIds = graft.operators.Bpe.vocabIds(docs, "text", merges)
       graft.operators.Bpe.encodeIds(docs, "text", "doc_id", merges, vocabIds)
         .select(col("doc_id"), col("n_bpe_tokens"),
           md5(array_join(transform(col("token_ids"), i => i.cast("string")), " ")

@@ -53,8 +53,7 @@ object QueryProfile {
     } catch { case _: Throwable => () }
 
     names.foreach { name =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Bench.sweepCaches(spark)
       jobs.clear(); stageToJob.clear()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, sfDir)

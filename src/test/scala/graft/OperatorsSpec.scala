@@ -1053,8 +1053,40 @@ class OperatorsSpec extends AnyFunSuite {
       Seq(1L, 2L, 4L))
   }
 
-  test("ppl bands: sampled thresholds match exact terciles; no window over " +
-      "unsampled data; exact path guard fires") {
+  /** the window formulation pplBuckets' rank replaced: (doc_id, bucket)
+    * from its (doc_id, lang, ppl) output, by percent_rank (exact) or by
+    * the sample's order statistics at ⌈qi·n/buckets⌉ (sampled) */
+  private def refPplBuckets(p: DataFrame, buckets: Int, exact: Boolean,
+      ratePerM: Int, salt: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("lang")).orderBy(col("ppl"), col("doc_id"))
+    val withBucket =
+      if (exact) p.withColumn("bucket",
+        least(floor(percent_rank().over(w) * buckets), lit(buckets - 1)).cast("long"))
+      else {
+        val thr = p.filter(Sampling.hashBucket(col("doc_id"), salt, 1000000) < ratePerM)
+          .select(col("lang"), col("ppl"), col("doc_id"), row_number().over(w).as("rn"),
+            count(lit(1)).over(Window.partitionBy(col("lang"))).as("n"))
+          .select(col("*"), explode(array((1 until buckets).map(lit(_)): _*)).as("qi"))
+          .filter(col("rn") === greatest(lit(1L), ceil(col("qi") * col("n") / lit(buckets))))
+          .groupBy(col("lang"))
+          .agg(sort_array(collect_list(struct(col("qi"), col("ppl").as("t_ppl"),
+            col("doc_id").as("t_doc")))).as("__thrs"))
+        p.join(broadcast(thr), Seq("lang"), "left")
+          .withColumn("bucket", coalesce(size(filter(col("__thrs"), t =>
+            col("ppl") > t("t_ppl") ||
+              (col("ppl") === t("t_ppl") && col("doc_id") > t("t_doc")))), lit(0))
+            .cast("long"))
+      }
+    withBucket.select(col("doc_id"), col("bucket"))
+  }
+
+  /** the logical Window nodes of `df`'s optimized plan */
+  private def windowsOf(df: DataFrame) =
+    df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
+
+  test("ppl bands: both paths equal the window formulation; no window in the plan") {
     import spark.implicits._
     import graft.operators.NgramLm
     val docs = (for {
@@ -1066,7 +1098,7 @@ class OperatorsSpec extends AnyFunSuite {
     // exact order statistics — with n % 3 == 0 per language, the
     // lexicographic (ppl, doc_id) comparison reproduces percent_rank
     // terciles row for row
-    def grab(df: org.apache.spark.sql.DataFrame) =
+    def grab(df: DataFrame) =
       df.select("doc_id", "bucket", "band").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val sk = grab(NgramLm.pplBuckets(docs, "text", "doc_id", "lang",
@@ -1075,48 +1107,114 @@ class OperatorsSpec extends AnyFunSuite {
       exact = true))
     assert(sk == ex)
     assert(sk.map(_._3) == Set("head", "middle", "tail"))
-    // plan pin (the r15 scale fix): every window in the DEFAULT path
-    // ranks the md5 SAMPLE — no sort partition ever holds a language's
-    // full corpus. Read the fixture from parquet so ConvertToLocal-
-    // Relation can't fold the sample filter away.
-    val pdir = java.nio.file.Files.createTempDirectory("pplband").toString
-    docs.write.mode("overwrite").parquet(pdir)
-    val plan = NgramLm.pplBuckets(spark.read.parquet(pdir),
-        "text", "doc_id", "lang")
-      .queryExecution.optimizedPlan
-    val wins = plan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
-    assert(wins.nonEmpty)
-    wins.foreach { w =>
-      val overSample = w.child.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.condition.toString.contains("md5") => f
+    // equal ppl under distinct ids (repeated texts), a NULL language,
+    // a one-row language, and languages of 11 and 7 rows (n not
+    // divisible by the bucket count)
+    val texts = Seq("the cat sat", "a dog ran far", "zx qv wk", "the cat sat on the mat",
+      "qq", "the the the")
+    val mixed = ((0 until 11).map(i => (i.toLong, texts(i % 4), "en")) ++
+      (0 until 7).map(i => (100L + i, texts(2 + i % 4), "fr")) ++
+      Seq((200L, "one lonely doc", "de")) ++
+      (0 until 5).map(i => (300L + i, texts(i % 3), null: String))).toDF("doc_id", "text", "lang")
+    // AQE folds tiny range partitions into one; this session keeps five,
+    // so the scan's runs cross partition boundaries
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    wide.conf.set("spark.sql.shuffle.partitions", "5")
+    for (session <- Seq(spark, wide); parts <- Seq(1, 3, 7);
+         (exact, rate, buckets) <- Seq((true, 250000, 3), (false, 600000, 3),
+           (false, 1000000, 4))) {
+      val df = session.createDataFrame(mixed.collectAsList(), mixed.schema).repartition(parts)
+      val tag = s"parts=$parts exact=$exact rate=$rate buckets=$buckets " +
+        s"wide=${session eq wide}"
+      val got = NgramLm.pplBuckets(df, "text", "doc_id", "lang", buckets = buckets,
+        exact = exact, ratePerM = rate)
+      assert(windowsOf(got).isEmpty, s"a Window in pplBuckets ($tag)")
+      assertSameRows(got.select("doc_id", "bucket"),
+        refPplBuckets(got.select("doc_id", "lang", "ppl"), buckets, exact, rate,
+          "ppl-band-v1"), s"pplBuckets $tag")
+      if (exact) assert(got.filter(col("lang") === "de").head().getLong(4) == 0L)
+    }
+  }
+
+  test("sketches: quantileEstimate and groupedQuantiles equal the window formulation") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    import graft.operators.Sketches
+    // the window formulation both replaced: type-1 picks at ⌈q·n⌉ per group
+    def ref(sample: DataFrame, g: Seq[String], qs: Seq[Double]): DataFrame =
+      sample.select(col("*"),
+          row_number().over(Window.partitionBy(g.map(col): _*).orderBy("v")).as("rn"),
+          count(lit(1)).over(Window.partitionBy(g.map(col): _*)).as("n"))
+        .select(col("*"), explode(array(qs.map(lit(_)): _*)).as("q"))
+        .filter(col("rn") === greatest(lit(1L), ceil(col("q") * col("n"))))
+        .select(g.map(col) ++ Seq(col("q"), col("v").as("est")): _*)
+    // duplicate values, NULL values, one-row groups, a NULL group key
+    val rows = (0 until 90).map { i =>
+      (i.toLong, if (i % 17 == 0) None else Some((i % 9).toDouble),
+        if (i % 10 == 0) null else s"g${i % 4}", i % 2)
+    } ++ Seq((1000L, Some(5.0), "solo", 0), (1001L, None, "solo-null", 1))
+    val base = rows.toDF("id", "v", "g", "h")
+    val qs = Seq(0.1, 0.25, 0.5, 0.9, 1.0)
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    wide.conf.set("spark.sql.shuffle.partitions", "5")
+    for (session <- Seq(spark, wide); parts <- Seq(1, 3, 7); rate <- Seq(1000000, 400000)) {
+      val df = session.createDataFrame(base.collectAsList(), base.schema).repartition(parts)
+      val tag = s"parts=$parts rate=$rate wide=${session eq wide}"
+      val sk = Sketches.quantileSample(df, "id", "v", ratePerM = rate)
+      val est = Sketches.quantileEstimate(sk, qs)
+      assert(windowsOf(est).isEmpty, s"a Window in quantileEstimate ($tag)")
+      assertSameRows(est, ref(sk.sample, Nil, qs), s"quantileEstimate $tag")
+      for (g <- Seq(Seq("g"), Seq("g", "h"))) {
+        val got = Sketches.groupedQuantiles(df, g, "id", "v", qs, ratePerM = rate)
+        assert(windowsOf(got).isEmpty, s"a Window in groupedQuantiles ($tag)")
+        val sample = df.filter(Sampling.hashBucket(col("id"), "qsk-v1", 1000000) < rate)
+          .select(g.map(col) :+ col("v").cast("double").as("v"): _*)
+        assertSameRows(got, ref(sample, g, qs), s"groupedQuantiles $g $tag")
       }
-      assert(overSample.nonEmpty,
-        s"window must rank the md5 sample, not the corpus:\n$w")
     }
-    // exact path keeps the pack-window stance: a language partition
-    // wider than maxLangRows raises the named error instead of
-    // silently single-tasking it
-    val err = intercept[Exception] {
-      NgramLm.pplBuckets(docs, "text", "doc_id", "lang",
-        exact = true, maxLangRows = 3).collect()
+    // an empty sample estimates nothing
+    val none = Sketches.quantileSample(base.filter(col("id") < 0), "id", "v")
+    assert(Sketches.quantileEstimate(none, qs).count() == 0)
+    assert(Sketches.groupedQuantiles(base.filter(col("id") < 0), Seq("g"), "id", "v", qs)
+      .count() == 0)
+  }
+
+  test("vocab: chars in Spark's UTF-8 order, pieces that are chars or repeats dropped") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // U+FF21 and U+1F600: Java's UTF-16 order puts the emoji first,
+    // UTF-8 (code point) order puts it last
+    val corpus = Seq("ba \uFF21c \uD83D\uDE00a", "cab \uFF21").toDF("text")
+    assert("\uD83D\uDE00" < "\uFF21")
+    // the window formulation the vocab replaced: distinct chars ranked
+    // by Spark's string order
+    def refChars(lower: Boolean): Seq[(Long, String, String)] =
+      corpus.select(explode(graft.functions.TextExprs.distinct_chars(col("text"), lower))
+          .as("symbol")).distinct()
+        .select((row_number().over(Window.orderBy(col("symbol"))) - 1).cast("long"),
+          col("symbol"))
+        .collect().map(r => (r.getLong(0), r.getString(1), "char")).toSeq.sortBy(_._1)
+    def rows(df: DataFrame) = df.orderBy("token_id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    for (lower <- Seq(true, false)) {
+      val chars = refChars(lower)
+      val c = chars.size.toLong
+      val merges = Seq("a" -> "b", "c" -> "ab")
+      assert(rows(Bpe.vocab(corpus, "text", merges, lower)) ==
+        chars ++ Seq((c, "ab", "merge"), (c + 1, "cab", "merge")), s"bpe lower=$lower")
+      val pieces = Seq("ab", "a", "ab", "\uD83D\uDE00x", "b", "\uD83D\uDE00")
+      assert(rows(Wordpiece.vocab(corpus, "text", pieces, lower)) ==
+        chars ++ Seq((c, "ab", "piece"), (c + 1, "\uD83D\uDE00x", "piece")),
+        s"wordpiece lower=$lower")
+      assert(Bpe.vocabIds(corpus, "text", merges, lower) ==
+        rows(Bpe.vocab(corpus, "text", merges, lower)).map(e => e._2 -> e._1).toMap)
+      assert(Wordpiece.vocabIds(corpus, "text", pieces, lower) ==
+        rows(Wordpiece.vocab(corpus, "text", pieces, lower)).map(e => e._2 -> e._1).toMap)
     }
-    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
-      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
-      .mkString("|")
-    assert(msgs.contains("language partition exceeds"))
-    // and the SKETCH path guards its own sample width: an under-sized
-    // rate (here: keep-everything) trips the same loud ceiling instead
-    // of silently single-tasking a giant "sample"
-    val errS = intercept[Exception] {
-      NgramLm.pplBuckets(docs, "text", "doc_id", "lang",
-        ratePerM = 1000000, maxLangRows = 3).collect()
-    }
-    val msgsS = Iterator.iterate[Throwable](errS)(_.getCause)
-      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
-      .mkString("|")
-    assert(msgsS.contains("SAMPLE exceeds"), msgsS.take(300))
+    val ids = Bpe.vocabIds(corpus, "text", Nil, lower = false)
+    assert(ids("\uFF21") < ids("\uD83D\uDE00"))
   }
 
   test("DSIR weights: target-like docs score positive, background negative") {
@@ -2326,6 +2424,11 @@ class OperatorsSpec extends AnyFunSuite {
         {"op": "cluster_balance", "vec_col": "embedding",
          "k": 4, "iters": 5, "salt": "cbs-v1", "cap": 30}]}""", idCol = "vec_id")
     check(docs, """{"stages": [{"op": "ppl_band", "keep": ["head"]}]}""")
+    // the q_curate_quantile spec: its threshold ranks a sample of the
+    // stage input on the prefix scan
+    check(docs, """{"stages": [
+        {"op": "quantile_filter", "column": "n_chars", "q": 0.25, "keep": "above"},
+        {"op": "dedup_exact"}]}""")
     // temperature_sample: a per-group count joined back to its input
     check(docs, """{"stages": [
         {"op": "normalize"},
@@ -2339,14 +2442,17 @@ class OperatorsSpec extends AnyFunSuite {
         {"op": "dedup_exact"},
         {"op": "dedup_paragraphs"},
         {"op": "repetition_filter", "max_dup_gram_frac": 0.5}]}""")
-    // the fineweb spec with every checkpoint reliable; the context's
-    // checkpoint dir is JVM-global, so it is unset again afterwards for
-    // the tests that point reliable mode at a dir of their own
+    // the fineweb spec with every checkpoint reliable. The context's
+    // checkpoint dir is JVM-global and a reliable session's dir must
+    // match it: the context's own dir is reused when one is set, and a
+    // dir set here is unset again afterwards for the tests that point
+    // reliable mode at a dir of their own
+    val ckDir = spark.sparkContext.getCheckpointDir
     val rel = spark.newSession()
     rel.conf.set("spark.graft.checkpoint.mode", "reliable")
     rel.conf.set("spark.graft.checkpoint.dir",
-      java.nio.file.Files.createTempDirectory("graft-report-ck").toString)
-    val ckDir = spark.sparkContext.getCheckpointDir
+      ckDir.map(d => new org.apache.hadoop.fs.Path(d).getParent.toString).getOrElse(
+        java.nio.file.Files.createTempDirectory("graft-report-ck").toString))
     try check(graft.queries.QueriesData.fineWebSeed(rel, sf01),
       graft.queries.QueriesData.fineWebSpec)
     finally if (ckDir.isEmpty) spark.sparkContext.setCheckpointDir(null)
@@ -3789,6 +3895,32 @@ class OperatorsSpec extends AnyFunSuite {
     val df4 = s4.createDataFrame(df.collectAsList(), df.schema)
     val e4 = intercept[IllegalArgumentException] { Materialize.checkpoint(df4) }
     assert(e4.getMessage.contains("spark.graft.checkpoint.dir"), e4.getMessage)
+  }
+
+  test("Materialize: a reliable dir other than the context's fails loudly, naming both") {
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "k")
+    def session(dir: String) = {
+      val s = spark.newSession()
+      s.conf.set("spark.graft.checkpoint.mode", "reliable")
+      s.conf.set("spark.graft.checkpoint.dir", dir)
+      s.createDataFrame(df.collectAsList(), df.schema)
+    }
+    // the context's dir is global to it: reuse the one it has, and
+    // unset a dir set here afterwards
+    val ckDir = spark.sparkContext.getCheckpointDir
+    val first = ckDir.map(d => new org.apache.hadoop.fs.Path(d).getParent.toUri.getPath)
+      .getOrElse(java.nio.file.Files.createTempDirectory("graft-ck-first").toString)
+    val other = java.nio.file.Files.createTempDirectory("graft-ck-other").toString
+    try {
+      assert(Materialize.checkpoint(session(first)).count() == 2L)
+      val e = intercept[IllegalArgumentException] {
+        Materialize.checkpoint(session(other))
+      }
+      assert(e.getMessage.contains(other) && e.getMessage.contains(first), e.getMessage)
+      // nothing was written under the other dir
+      assert(Option(new java.io.File(other).listFiles).forall(_.isEmpty))
+    } finally if (ckDir.isEmpty) spark.sparkContext.setCheckpointDir(null)
   }
 
   test("Par.widen leaves a frame with a missing input file unchanged") {

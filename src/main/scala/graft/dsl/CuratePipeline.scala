@@ -656,8 +656,9 @@ object CuratePipeline {
         // is NON-NULL (the label-a-slice, filter-the-corpus shape)
         // over the named count-feature columns, score every row, keep
         // by predicted sign ("keep": "positive" default / "negative").
-        // Training = `iters` tiny elementwise-sum shuffles over the
-        // labeled slice; scoring = map-only with broadcast weights.
+        // Training = one grouping shuffle of the labeled slice, then one
+        // job per round (`iters`) over its grouped profiles; scoring =
+        // map-only with broadcast weights.
         val labelCol = str(st, "label_col")
         val featCols = strSeq(st, "feature_cols", Nil)
         if (featCols.isEmpty) throw new DslException(
@@ -809,7 +810,7 @@ object CuratePipeline {
             val unk = st \ "unk" match {
               case JInt(i) => i.toLong
               case JNothing =>
-                if (art.floatScaled) -10L * 1000000L else -10000000000L
+                if (art.floatScaled) -10L * graft.operators.Unigram.FloatScale else -10000000000L
               case other =>
                 throw new DslException(s"'unk' must be an integer, got $other")
             }
@@ -891,8 +892,7 @@ object CuratePipeline {
         // the flag says which scale the weights landed on (r16); a
         // full `<0xNN>` table rides along as the byte-fallback scores
         // (r17) so OOV characters decompose instead of scoring unk
-        try graft.operators.Unigram.readVocabArtifact(path,
-          preserveMarkers = boundary)
+        try graft.operators.Unigram.readVocab(path, preserveMarkers = boundary)
         catch {
           case e: IllegalArgumentException =>
             throw new DslException(

@@ -31,10 +31,6 @@ import graft.functions.ByteBpeExprs
   */
 object ByteBpe {
 
-  /** GPT-2 pre-tokens of a text column (array<string>) */
-  def preTokens(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    ByteBpeExprs.gpt2_split(text)
-
   /** Default trainer ceiling for the byte path, in MAPPED BYTES — the
     * unit the symbol arrays and merge rounds actually pay for. 4× the
     * char path's 64 (r16, ADVICE r15): non-ASCII text multiplies its

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -404,32 +403,22 @@ object Dedup {
     *    doubles how far a label travels per round: a chain of diameter
     *    d settles in O(log d) rounds, not d;
     *  - the change flag, new label < label before the round.
-    * The round's labels are checkpointed ([[Materialize]]) by the one
-    * action that counts changed labels: one job per round, plus the
-    * checkpoint write in reliable mode. The loop stops at the first
-    * round that changes nothing. Then no edge can lower either end, so
-    * both ends of every edge carry one label, the component minimum
-    * (the classical fixpoint). Not converging in `maxIter` rounds is
-    * an error. */
+    * The rounds run on [[Materialize.rounds]]: each round's labels are
+    * checkpointed by the one action that counts changed labels (one job
+    * per round, plus the checkpoint write in reliable mode), and the
+    * loop stops at the first round that changes nothing. Then no edge
+    * can lower either end, so both ends of every edge carry one label,
+    * the component minimum (the classical fixpoint). Not converging in
+    * `maxIter` rounds is an error. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
-    val both = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-    val id = both.schema("src")
-    val t = id.dataType
-    require(t match {
-      case StringType | BooleanType | ByteType | ShortType | IntegerType | LongType |
-          DateType | TimestampType | TimestampNTZType | _: DecimalType => true
-      case _ => false
-    }, s"connectedComponents needs ids whose values compare by equality, got ${t.sql}")
-    val ord = PhysicalDataType.ordering(t)
+    val (rows, id) = Materialize.keyPairs(pairs, aCol, bCol, "connectedComponents")
+    val ord = PhysicalDataType.ordering(id.dataType)
     def least(a: Any, b: Any): Any = if (ord.lt(b, a)) b else a
-    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val part = Materialize.keyPartitioner(spark)
     Par.withJobDescription(spark.sparkContext, "cc: edges") {
-      // rows are copied: Catalyst reuses them, and a string points into its row
-      val edges = both.queryExecution.toRdd
-        .map { r => val c = r.copy(); (c.get(0, t), c.get(1, t)) }
+      val edges = rows.flatMap { case (a, b) => Iterator(a -> b, b -> a) }
         .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
       // labels and the round's result: (id, (label, changed))
       def round(labels: RDD[(Any, (Any, Boolean))]): RDD[(Any, (Any, Boolean))] = {
@@ -452,23 +441,13 @@ object Dedup {
       }
       try {
         // every id starts as its own label, marked changed so it sends
-        var labels: RDD[(Any, (Any, Boolean))] = edges.mapPartitions(
-          _.map(_._1).distinct.map(v => v -> (v, true)), preservesPartitioning = true)
-        var changed = 1L
-        var i = 0
-        while (changed > 0 && i < maxIter) {
-          spark.sparkContext.setJobDescription(s"cc: round ${i + 1}")
-          val next = round(labels)
-          changed = Materialize.checkpoint(spark, next)(_.filter(_._2._2).count())
-          labels.unpersist(blocking = false)
-          labels = next
-          i += 1
-        }
+        val (labels, changed) = Materialize.rounds(spark, "cc", edges.mapPartitions(
+          _.map(_._1).distinct.map(v => v -> (v, true)), preservesPartitioning = true),
+          maxIter)(round)
         require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
         RelationBridge.ofInternalRows(spark,
           labels.map { case (x, (l, _)) => InternalRow(x, l) },
-          StructType(Seq(StructField("id", t, id.nullable),
-            StructField("cluster_id", t, id.nullable))))
+          StructType(Seq(id.copy(name = "id"), id.copy(name = "cluster_id"))))
       } finally edges.unpersist(blocking = false)
     }
   }

@@ -1,7 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RelationBridge
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Crawl link graph: host-level edges out of page HTML and a
   * fixed-iteration PageRank over them — the frontier-prioritization /
@@ -11,14 +15,13 @@ import org.apache.spark.sql.functions._
   * are scientific); the shapes here are the standard ones.
   *
   * Scale: edge extraction is a map-only pass over pages followed by
-  * ONE (src, dst) shuffle; PageRank costs two broadcast-free joins +
-  * one aggregation per iteration, all partitioned by host key. Node
-  * and degree tables derive once and re-join each round. Host keys
+  * ONE (src, dst) shuffle. PageRank groups the edges by source once and
+  * keeps them and the ranks on one hash partitioning of the host key,
+  * so a round is one job with one shuffle, the contributions. Host keys
   * are low-cardinality relative to pages (the 100 TB corpus has ~10⁷
   * hosts, not 10¹¹), so the per-iteration shuffle is small; skewed
   * mega-hosts (wikipedia.org) concentrate on the DST side of the
-  * contribution aggregation, which is a partial-aggregated groupBy —
-  * map-side combine absorbs the skew before it ships.
+  * contribution sum, which combines map-side before it ships.
   */
 object LinkGraph {
 
@@ -97,48 +100,59 @@ object LinkGraph {
     * in-edges. Dangling nodes (no out-edges) leak their damped mass —
     * the simple convention, stated here because it is part of the
     * replayable contract; ranks then sum to < 1 in graphs with sinks.
+    * As in a SQL join, a NULL endpoint is one node of its own that links
+    * nothing: a NULL source sends nothing, and a NULL destination counts
+    * in its source's out-degree but receives nothing.
     *
     * Determinism across engines: every iteration rounds to 9 decimals
-    * so floating summation order cannot accumulate drift between this
-    * plan and a SQL replay of the same rounds.
+    * (Spark's `round`, half up) so floating summation order cannot
+    * accumulate drift between this loop and a SQL replay of the same
+    * rounds.
     *
-    * N rides as a one-row aggregate frame broadcast into the plan (no
-    * driver-side count action); the iteration chain is pure plan —
-    * callers iterating far past the default on huge graphs should
-    * checkpoint every few rounds to bound lineage. */
+    * The co-partitioned RDD loop on [[Materialize.rounds]], as in
+    * [[Dedup.connectedComponents]]: the distinct edges are grouped once
+    * into `(src, dsts)` on `spark.sql.shuffle.partitions` hash
+    * partitions and persisted there, and the ranks share that
+    * partitioner, so `links ⋈ ranks` is narrow. N is counted once on
+    * the driver. A round is one map-side-combined shuffle of the
+    * contributions and a narrow `ranks ⟕ mass`, checkpointed and
+    * forced by one action: one job per round. The loop stops early
+    * when a round changes no rank, since every later round would repeat
+    * it. Node ids are of a type whose values compare by equality (see
+    * [[Materialize.keyPairs]]). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"pageRank: iterations must be >= 1, got $iterations")
-    // r17: the edge list (often an HTML link-extraction pass) is
-    // referenced twice per power iteration — uncheckpointed, the
-    // extraction re-ran ~2·iterations times and the optimizer re-walked
-    // the whole extraction subtree at every reference (measured: ~2.5 s
-    // of pure driver planning on the frontier gates). Checkpointing the
-    // THREE loop-invariant frames once truncates both.
-    val e = Materialize.checkpoint(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val nodes = Materialize.checkpoint(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val outDeg = Materialize.checkpoint(
-      e.groupBy("src").agg(count(lit(1)).as("out_deg")))
-    val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
-    var ranks = nodes.crossJoin(broadcast(nNodes))
-      .select(col("node"), round(lit(1.0) / col("n_nodes"), 9).as("rank"))
-    var i = 0
-    while (i < iterations) {
-      val contribs = e
-        .join(ranks, e("src") === ranks("node"))
-        .join(outDeg, "src")
-        .select(col("dst"), (col("rank") / col("out_deg")).as("contrib"))
-        .groupBy("dst").agg(sum(col("contrib")).as("mass"))
-      ranks = nodes
-        .join(contribs, nodes("node") === contribs("dst"), "left")
-        .crossJoin(broadcast(nNodes))
-        .select(col("node"),
-          round(lit(1.0 - damping) / col("n_nodes") +
-            lit(damping) * coalesce(col("mass"), lit(0.0)), 9).as("rank"))
-      i += 1
+    val spark = edges.sparkSession
+    val (rows, node) = Materialize.keyPairs(edges, srcCol, dstCol, "pageRank")
+    val part = Materialize.keyPartitioner(spark)
+    Par.withJobDescription(spark.sparkContext, "pagerank: links") {
+      val links = rows.aggregateByKey(Set.empty[Any], part)(_ + _, _ ++ _)
+        .mapValues(_.toArray).persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val nodes = links.flatMap { case (src, dsts) => (src +: dsts).map(_ -> ()) }
+          .reduceByKey(part, (u, _) => u)
+        val n = nodes.count().toDouble
+        // ranks and the round's result: (node, (rank, changed))
+        val (ranks, _) = Materialize.rounds(spark, "pagerank",
+            nodes.mapValues(_ => (round9(1.0 / n), true)), iterations) { ranks =>
+          val mass = links.join(ranks, part).flatMap { case (src, (dsts, (r, _))) =>
+            if (src == null) Iterator.empty
+            else dsts.iterator.filter(_ != null).map(_ -> r / dsts.length)
+          }.reduceByKey(part, _ + _)
+          ranks.leftOuterJoin(mass, part).mapValues { case ((r, _), m) =>
+            val next = round9((1.0 - damping) / n + damping * m.getOrElse(0.0))
+            (next, next != r)
+          }
+        }
+        RelationBridge.ofInternalRows(spark,
+          ranks.map { case (v, (r, _)) => InternalRow(v, r) },
+          StructType(Seq(node.copy(name = "node"), StructField("rank", DoubleType))))
+      } finally links.unpersist(blocking = false)
     }
-    ranks
   }
+
+  /** Spark's `round(x, 9)` on a double */
+  private def round9(x: Double): Double =
+    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 }

@@ -426,19 +426,6 @@ object Multimodal {
       } catch { case scala.util.control.NonFatal(_) => (0, 0, "none") }
   }
 
-  /** metadata struct carried beside every media payload */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("media_type", StringType),   // image | audio | video
-    StructField("format", StringType),       // png, wav, mp4, ...
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
-
-  def mediaSchema(idType: DataType): StructType = StructType(Seq(
-    StructField("media_id", idType),
-    StructField("payload", BinaryType),
-    StructField("meta", mediaMetaSchema)))
-
   /** Deterministic pseudo-codec: all outputs are md5-derived so the
     * DuckDB oracle can replay the gate pipelines (`md5_number_lower` =
     * little-endian u64 of digest bytes 8..16, matching [[md5Lower64]]),

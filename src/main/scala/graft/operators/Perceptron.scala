@@ -15,16 +15,17 @@ import org.apache.spark.sql.functions._
   * Rosenblatt's rule):
   *  - margin(d)  = y_d · (w_t · x_d)        with x_d = [1, features...]
   *  - w_{t+1}    = w_t + Σ_{margin ≤ 0} y_d · x_d
-  * The whole loop is ONE lazy plan: each round is a map-side-combined
-  * elementwise sum (one tiny shuffle to a one-row frame) and the
-  * weights re-enter the next round as a broadcast one-row frame —
-  * never a driver-side `collect`, so the training data can be any
-  * size. The slice pre-aggregates to distinct (label, features)
-  * profiles with multiplicities before round 1 (one shuffle, exact —
-  * a round's update is a pure function of the profile), so the rounds
-  * scan the grouped frame, not the full slice; it is checkpointed
-  * internally, so callers no longer need to cache the feature frame
-  * for the rounds' sake.
+  * The slice pre-aggregates to distinct (label, features) profiles
+  * with multiplicities before round 1 (one shuffle, exact — a round's
+  * update is a pure function of the profile) and is checkpointed once,
+  * so callers need not cache the feature frame for the rounds' sake.
+  * The k+1 weights live on the driver: each round is ONE
+  * `treeAggregate` over the profiles with the weights in the closure
+  * (MLlib's gradient-descent shape), one job under the label
+  * `perceptron: round i`. Only the k+1 sums come back, never a
+  * profile, so the training data can be any size. The arithmetic is
+  * exact (`Math.multiplyExact`/`addExact`): an overflow fails the
+  * round, as the ANSI plan it replaces did; it never wraps.
   *
   * Integer overflow bound (caller's contract, checked loudly at score
   * time): |w_j| grows at most `iters · Σ_d |x_dj|`, and scores by
@@ -63,42 +64,28 @@ object Perceptron {
       .otherwise(raise_error(
         concat(lit(s"perceptron: features arity "), (size(xb) - 1).cast("string"),
           lit(s" != $k"))))
-    // r17 (guide §2.3 "aggregate before you shuffle"): a round's update
-    // Σ_{margin≤0} y·x is identical over the DISTINCT (y, x) profiles
-    // weighted by their multiplicity — margin is a pure function of
-    // (y, x, w) — so the training slice pre-aggregates ONCE to
-    // (y, x, n) and every round scans that frame instead of the full
-    // slice. The grouped frame is at most slice-sized and usually tiny
-    // (count features repeat heavily); the checkpoint stops the
-    // group-by re-running per round and truncates the per-round plan.
-    val feats = Materialize.checkpoint(df.select(y.as("y"), checked.as("x"))
-      .groupBy(col("y"), col("x")).agg(count(lit(1)).as("n")))
-    var w: DataFrame = spark.range(1)
-      .select(array(Seq.fill(k + 1)(lit(0L)): _*).as("w"))
-    for (_ <- 1 to iters) {
-      // one broadcast join + ONE map-side-combined aggregation per
-      // round (k+1 first/sum pairs straight to a one-row array — the
-      // arity is a parameter, so no explode/regroup detour), and the
-      // carried weights re-enter through that SAME join: w referenced
-      // once per round — referencing the previous round twice would
-      // double the plan per round and blow up exponentially in
-      // `iters`. An empty training slice aggregates zero rows →
-      // first() is null → coalesce keeps 0⃗, so the result is always
-      // one row of k+1 weights, never a vanishing join input.
-      val dot = aggregate(zip_with(col("w"), col("x"), _ * _),
-        lit(0L), _ + _)
-      val contrib = when(col("y") * dot <= 0, col("y") * col("n")).otherwise(lit(0L))
-      // each round materializes its one-row weight frame eagerly: the
-      // lazy 20-round chain optimized as ONE nested plan and catalyst
-      // paid seconds re-walking it (measured: ~7 s of driver time for
-      // 20 rounds at gate scale); a per-round checkpoint keeps every
-      // round's plan depth-1 for the price of a tiny job
-      w = Materialize.checkpoint(feats.crossJoin(broadcast(w))
-        .agg(array((0 to k).map(j =>
-          coalesce(first(col("w").getItem(j)) +
-            sum(contrib * col("x").getItem(j)), lit(0L))): _*).as("w")))
+    // a round's update Σ_{margin≤0} y·x is identical over the DISTINCT
+    // (y, x) profiles weighted by their multiplicity — margin is a pure
+    // function of (y, x, w) — so the training slice pre-aggregates ONCE
+    // to (y, x, n) and every round scans that checkpoint instead of the
+    // full slice (count features repeat heavily)
+    val feats = Par.withJobDescription(spark.sparkContext, "perceptron: profiles")(
+      Materialize.checkpoint(df.select(y.as("y"), checked.as("x"))
+        .groupBy(col("y"), col("x")).agg(count(lit(1)).as("n"))))
+    val profiles = feats.queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getArray(1).toLongArray(), r.getLong(2)))
+    // an empty training slice aggregates nothing and keeps 0⃗
+    val w = (1 to iters).foldLeft(new Array[Long](k + 1)) { (cur, i) =>
+      val update = Par.withJobDescription(spark.sparkContext, s"perceptron: round $i")(
+        profiles.treeAggregate(new Array[Long](k + 1))({ case (acc, (yd, x, n)) =>
+          val dot = (0 to k).foldLeft(0L)((s, j) => Math.addExact(s, Math.multiplyExact(cur(j), x(j))))
+          if (Math.multiplyExact(yd, dot) <= 0)
+            for (j <- 0 to k) acc(j) = Math.addExact(acc(j), Math.multiplyExact(yd * n, x(j)))
+          acc
+        }, { (a, b) => for (j <- 0 to k) a(j) = Math.addExact(a(j), b(j)); a }))
+      cur.zip(update).map { case (a, b) => Math.addExact(a, b) }
     }
-    w
+    spark.range(1).select(array(w.toSeq.map(v => lit(v)): _*).as("w"))
   }
 
   /** Score every row of `df`: adds `score` (w · [1, features]) and

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TextExprs
@@ -27,14 +27,6 @@ object TextOps {
   def tokens(text: Column): Column = TextExprs.tokens(text)
 
   def tokenCount(text: Column): Column = stats(text).getField("n_tokens")
-
-  /** BPE-ish subword count estimate: whitespace tokens plus intra-token
-    * splits on case/digit/punct boundaries (a cheap proxy for tokenizer
-    * budget accounting when no vocab is loaded). */
-  def subwordCountEstimate(text: Column): Column =
-    size(filter(split(trim(text),
-      "\\s+|(?<=[a-z])(?=[A-Z])|(?<=[A-Za-z])(?=[0-9])|(?<=[0-9])(?=[A-Za-z])"),
-      t => length(t) > 0))
 
   def charCount(text: Column): Column = length(text)
 
@@ -104,14 +96,6 @@ object TextOps {
     * whitespace-collapsed text — the exact-dedup key */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** Rolling polynomial hash over tokens (documents sharing long token
-    * runs collide): h = (h * 1000003 + tokenValue) mod (2^31-1).
-    * Modular fold keeps every step in range under ANSI mode. */
-  def rollingTokenHash(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (h, t) => pmod(h * 1000003L + (xxhash64(t) % 1000000007L + 1000000007L) % 1000000007L,
-        lit(2147483647L)))
 
   /** word n-gram shingles (n consecutive tokens joined by one space);
     * docs shorter than n tokens fall back to a single whole-text shingle */
@@ -268,7 +252,8 @@ object TextOps {
     * aggregates (long sum / count — no order-dependent double sum)
     * broadcast alongside. Ranking uses the 6-decimal-rounded score
     * (ties → doc id) so rank agrees across engines regardless of
-    * sub-ulp float differences. */
+    * sub-ulp float differences. The ≤ k result rows are ranked on the
+    * driver, so the call runs the retrieval before it returns. */
   def bm25TopK(df: DataFrame, textCol: String, idCol: String,
       queryTerms: Seq[String], k: Int = 20,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -294,15 +279,16 @@ object TextOps {
       .join(docLen, "doc_id")
       .crossJoin(broadcast(corpus))
       .groupBy(col("doc_id")).agg(sum(w).as("s"))
-    import org.apache.spark.sql.expressions.Window
-    // top-k FIRST (TakeOrderedAndProject: per-partition heaps, no global
-    // sort) so the rank-assigning window runs over ≤ k rows, not every
-    // matching document
-    scored.orderBy(round(col("s"), 6).desc, col("doc_id")).limit(k)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(round(col("s"), 6).desc, col("doc_id"))))
-      .select(col("doc_id"), col("rk").cast("long").as("rk"),
-        round(col("s"), 4).as("bm25"))
+    // top-k on the cluster (TakeOrderedAndProject: per-partition heaps,
+    // no global sort); the ≤ k rows it collects arrive in rank order and
+    // are numbered on the driver
+    val top = scored.orderBy(round(col("s"), 6).desc, col("doc_id")).limit(k)
+      .select(col("doc_id"), round(col("s"), 4).as("bm25"))
+    val ranked = top.collect().iterator.zipWithIndex
+      .map { case (r, i) => Row(r.get(0), i + 1L, r.get(1)) }.toSeq
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(ranked: _*),
+      StructType(Seq(top.schema("doc_id"), StructField("rk", LongType, nullable = false),
+        top.schema("bm25"))))
   }
 
   /** Canonical text normalization — the first pass of a corpus scrub:

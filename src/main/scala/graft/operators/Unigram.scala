@@ -199,15 +199,37 @@ object Unigram {
     graft.sources.io.ByteStore.writeString(path, sb.toString)
   }
 
+  /** weight units per nat of a float log-prob score in a vocab artifact
+    * ([[parseVocabArtifact]]) */
+  final val FloatScale = 1000000L
+
+  /** a parsed vocab artifact: lattice pieces, the float-scale fact, and
+    * — when the file ships the COMPLETE `<0x00>`..`<0xFF>` table — the
+    * SentencePiece BYTE-FALLBACK scores (r17): OOV characters decompose
+    * into UTF-8 byte pieces instead of scoring unk. Only the full
+    * 256-piece set extracts (spm's byte_fallback always writes all 256);
+    * a partial set stays literal text pieces, as a code-corpus vocab can
+    * legitimately learn `<0x00>`-shaped strings and pre-r17 artifacts
+    * parsed them that way.
+    *
+    * `floatScaled` is true when the file carried float log-prob scores
+    * and the weights were quantized at [[FloatScale]] units per nat —
+    * callers deriving a default unk score MUST derive it in the file's
+    * units (−10 nats is −10·FloatScale here, not the trainer's
+    * −10·10⁹), or OOV competition flips against every piece. */
+  final case class VocabArtifact(pieces: Seq[(String, Long)],
+      floatScaled: Boolean, byteScores: Option[Array[Long]])
+
   /** Parse a vocab artifact in EITHER the engine's own format
     * (`piece<TAB>integer-scaled-weight`, [[writeVocab]]) or the
     * published SentencePiece `.vocab` text format
     * (`piece<TAB>float-log-prob`, `▁` word-boundary markers,
     * `<unk>`/`<s>`/`</s>` control rows) — the projection a production
     * spm vocab needs to drive [[encode]]:
-    *  - float scores quantize to integer MILLIONTHS (Viterbi compares
-    *    weight sums, so any uniform scale preserves the argmax; 1e-6
-    *    resolution is far below spm's printed 6-digit scores);
+    *  - float scores quantize to integer MILLIONTHS ([[FloatScale]]:
+    *    Viterbi compares weight sums, so any uniform scale preserves the
+    *    argmax; 1e-6 resolution is far below spm's printed 6-digit
+    *    scores);
     *  - the CANONICAL spm control rows (`<unk>`, `<s>`, `</s>`,
     *    `<pad>`, `<mask>`, `<cls>`, `<sep>`, `<bos>`, `<eos>`) are
     *    skipped as id-table metadata; any other angle-bracketed piece
@@ -221,36 +243,6 @@ object Unigram {
     *    vocabs that score a piece differently word-initially vs
     *    word-internally collapse to the optimistic variant. */
   def parseVocabArtifact(content: String,
-      floatScale: Long = 1000000L): Seq[(String, Long)] =
-    parseVocabArtifactScaled(content, floatScale)._1
-
-  /** [[parseVocabArtifact]] plus the SCALE FACT (r16, ADVICE r15): the
-    * returned flag is true when the file carried float log-prob scores
-    * and the weights were quantized at `floatScale` units per nat —
-    * callers deriving a default unk score MUST derive it in the file's
-    * units (−10 nats is −10·floatScale here, not the trainer's
-    * −10·10⁹), or OOV competition flips against every piece. */
-  /** a parsed vocab artifact: lattice pieces, the float-scale fact,
-    * and — when the file ships the COMPLETE `<0x00>`..`<0xFF>` table —
-    * the SentencePiece BYTE-FALLBACK scores (r17): OOV characters
-    * decompose into UTF-8 byte pieces instead of scoring unk. Only the
-    * full 256-piece set extracts (spm's byte_fallback always writes
-    * all 256); a partial set stays literal text pieces, as a
-    * code-corpus vocab can legitimately learn `<0x00>`-shaped strings
-    * and pre-r17 artifacts parsed them that way. */
-  final case class VocabArtifact(pieces: Seq[(String, Long)],
-      floatScaled: Boolean, byteScores: Option[Array[Long]])
-
-  def parseVocabArtifactScaled(content: String,
-      floatScale: Long = 1000000L,
-      preserveMarkers: Boolean = false): (Seq[(String, Long)], Boolean) = {
-    val art = parseVocabArtifactFull(content, floatScale, preserveMarkers)
-    (art.pieces, art.floatScaled)
-  }
-
-  /** [[parseVocabArtifactScaled]] plus byte-fallback extraction */
-  def parseVocabArtifactFull(content: String,
-      floatScale: Long = 1000000L,
       preserveMarkers: Boolean = false): VocabArtifact = {
     val marker = '▁'
     val intRe = "-?\\d+"
@@ -279,8 +271,8 @@ object Unigram {
     }
     def weightOf(p0: String, w: String): Long =
       if (w.matches(intRe))
-        if (anyFloat) math.round(w.toDouble * floatScale) else w.toLong
-      else if (w.matches(floatRe)) math.round(w.toDouble * floatScale)
+        if (anyFloat) math.round(w.toDouble * FloatScale) else w.toLong
+      else if (w.matches(floatRe)) math.round(w.toDouble * FloatScale)
       else throw new IllegalArgumentException(
         s"bad vocab score '$w' for piece '$p0' " +
           "(want integer weight or float log-prob)")
@@ -327,32 +319,14 @@ object Unigram {
   }
 
   /** read a vocab artifact ([[parseVocabArtifact]] formats) through
-    * the ByteStore seam */
-  def readVocab(path: String): Seq[(String, Long)] =
-    parseVocabArtifact(graft.sources.io.ByteStore.readString(path))
-
-  /** [[readVocab]] plus the float-scale flag (see
-    * [[parseVocabArtifactScaled]]) */
-  def readVocabScaled(path: String): (Seq[(String, Long)], Boolean) =
-    parseVocabArtifactScaled(graft.sources.io.ByteStore.readString(path))
-
-  /** read a vocab artifact PRESERVING `▁` word-boundary markers (r16)
-    * for the boundary-aware encode ([[TextExprs.ugEncodeKernel]]'s
+    * the ByteStore seam. `preserveMarkers` (r16) keeps `▁` word-boundary
+    * markers for the boundary-aware encode ([[TextExprs.ugEncodeKernel]]'s
     * `boundary = true`): pieces keep their marked/bare identities and
     * their OWN scores instead of collapsing to the optimistic max —
     * published vocabularies that score word-initial pieces differently
-    * segment exactly as SentencePiece would. Returns (pieces,
-    * floatScaled). */
-  def readVocabBoundary(path: String): (Seq[(String, Long)], Boolean) =
-    parseVocabArtifactScaled(graft.sources.io.ByteStore.readString(path),
-      preserveMarkers = true)
-
-  /** the FULL artifact (pieces + scale fact + byte-fallback table) —
-    * what a published Llama-style `byte_fallback: true` vocab needs */
-  def readVocabArtifact(path: String,
-      preserveMarkers: Boolean = false): VocabArtifact =
-    parseVocabArtifactFull(graft.sources.io.ByteStore.readString(path),
-      preserveMarkers = preserveMarkers)
+    * segment exactly as SentencePiece would. */
+  def readVocab(path: String, preserveMarkers: Boolean = false): VocabArtifact =
+    parseVocabArtifact(graft.sources.io.ByteStore.readString(path), preserveMarkers)
 
   /** Encode every document against a fixed integer-weighted vocab:
     * map-only Viterbi, one codegen kernel call per row; a single char

@@ -922,8 +922,8 @@ object QueriesData {
       val t = col("text")
       def cnt(sub: String): Column =
         (length(t) - length(replace(t, lit(sub), lit("")))).cast(LongType)
-      // 20 rounds re-scan the training input — cache it (the operator's
-      // own contract; the verify/bench harnesses sweep caches after)
+      // training (the even slice) and scoring both read the features —
+      // cache them (the verify/bench harnesses sweep caches after)
       val feats = Tables.load(s, dir, "documents").select(
         col("doc_id"),
         array(cnt("."), cnt(" the ")).as("x"),
@@ -1429,7 +1429,7 @@ object QueriesData {
           "in\t-4.0\na\t-3.0\ne\t-3.0\nt\t-4.0\ns\t-4.0\n")
       val merges = ByteBpe.readGpt2Merges(s"$tmp/vocab.bpe")
       val encoder = ByteBpe.readGpt2Encoder(s"$tmp/encoder.json")
-      val spm = Unigram.readVocab(s"$tmp/spm.vocab")
+      val spm = Unigram.readVocab(s"$tmp/spm.vocab").pieces
       // r18: this gate runs TWO heavy encode kernels (byte-BPE + remap,
       // Viterbi) plus a broadcast build over a 1-split scan — all its
       // jobs measured single-task (guide §2.5); widen both seeds once
@@ -1463,7 +1463,8 @@ object QueriesData {
       val tmp = java.nio.file.Files.createTempDirectory("graft-ugb").toString
       graft.sources.io.ByteStore.writeString(s"$tmp/b.vocab",
         boundaryVocab.map { case (p, sc) => s"$p\t$sc" }.mkString("\n") + "\n")
-      val (pieces, _) = graft.operators.Unigram.readVocabBoundary(s"$tmp/b.vocab")
+      val pieces = graft.operators.Unigram.readVocab(s"$tmp/b.vocab",
+        preserveMarkers = true).pieces
       val words = Tables.load(s, dir, "documents")
         .select(explode(split(lower(col("text")), "\\s+")).as("w"))
         .filter(col("w").rlike("^[a-z]{3,8}$"))
@@ -1490,7 +1491,7 @@ object QueriesData {
       graft.sources.io.ByteStore.writeString(s"$tmp/bf.vocab",
         (boundaryVocab ++ byteFallbackRows)
           .map { case (p, sc) => s"$p\t$sc" }.mkString("\n") + "\n")
-      val art = graft.operators.Unigram.readVocabArtifact(s"$tmp/bf.vocab",
+      val art = graft.operators.Unigram.readVocab(s"$tmp/bf.vocab",
         preserveMarkers = true)
       require(art.byteScores.isDefined, "byte table did not load")
       val words = Tables.load(s, dir, "documents")

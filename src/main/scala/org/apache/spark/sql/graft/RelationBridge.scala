@@ -3,7 +3,8 @@
  * internalCreateDataFrame. Used by table-format sources (Delta) to plan
  * a log-defined file set as ONE parquet relation whose partition pruning
  * runs against an in-memory manifest instead of a per-partition Union
- * fan, and by RDD operators to hand back Catalyst rows as a frame. */
+ * fan, and by RDD operators to hand back Catalyst rows as a frame and to
+ * release their per-round state (the private[spark] unpersistRDD). */
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
@@ -25,6 +26,12 @@ object RelationBridge {
   def ofInternalRows(spark: SparkSession, rows: RDD[InternalRow],
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** Drops `rdd`'s cached blocks. `RDD.unpersist` does the same but
+    * warns for a locally checkpointed RDD that it cannot be recomputed,
+    * which is the point for a finished round's state: nothing reads it
+    * again once the next round is checkpointed. */
+  def release(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** One parquet `HadoopFsRelation` over an explicit [[FileIndex]].
     * Output columns are `dataSchema ++ partitionSchema` (partition values

@@ -65,7 +65,7 @@ class ByteBpeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("encoder.json is missing"), e.getMessage)
     // spm-style .vocab: control rows skip, ▁ strips, bare/marked
     // collision keeps the higher score, floats quantize to millionths
-    val spm = graft.operators.Unigram.readVocab(s"$fx/fixture.vocab")
+    val spm = graft.operators.Unigram.readVocab(s"$fx/fixture.vocab").pieces
     val m = spm.toMap
     assert(!m.contains("<unk>") && !m.contains("<s>"))
     assert(m("table") == -10000000L)
@@ -79,11 +79,11 @@ class ByteBpeSpec extends AnyFunSuite {
     // scale consistency: a float anywhere puts the WHOLE file in
     // log-prob units — integer-formatted scores scale with it
     val mixed = graft.operators.Unigram
-      .parseVocabArtifact("ab\t-10\ncd\t-5.0\n").toMap
+      .parseVocabArtifact("ab\t-10\ncd\t-5.0\n").pieces.toMap
     assert(mixed("ab") == -10000000L && mixed("cd") == -5000000L, mixed)
     // an all-integer file is the engine's own format: weights verbatim
     val ints = graft.operators.Unigram
-      .parseVocabArtifact("ab\t-10\ncd\t-5\n").toMap
+      .parseVocabArtifact("ab\t-10\ncd\t-5\n").pieces.toMap
     assert(ints("ab") == -10L && ints("cd") == -5L, ints)
     // r15 review fixes: the REAL GPT-2 vocab.bpe carries merges whose
     // left symbol is '#' ("# #" → "##") — only #version and prose
@@ -97,7 +97,7 @@ class ByteBpeSpec extends AnyFunSuite {
     // piece; a '#'-piece line (has a tab) is data, tab-less '#' lines
     // are comments
     val spm2 = graft.operators.Unigram.parseVocabArtifact(
-      "# a comment line\n<unk>\t0\n<br>\t-6.0\n#\t-8.25\nab\t-2.0\n").toMap
+      "# a comment line\n<unk>\t0\n<br>\t-6.0\n#\t-8.25\nab\t-2.0\n").pieces.toMap
     assert(!spm2.contains("<unk>"))
     assert(spm2("<br>") == -6000000L && spm2("#") == -8250000L, spm2)
   }
@@ -165,8 +165,9 @@ class ByteBpeSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(tmp.resolve("b.vocab"),
       "<unk>\t0.0\n▁\t-2.0\n▁th\t-1.0\nth\t-9.0\ne\t-2.0\nt\t-2.5\n" +
         "h\t-2.5\na\t-2.0\nm\t-2.5\nma\t-3.0\n▁ma\t-6.0\n")
-    val (pieces, floatScaled) = Unigram.readVocabBoundary(
-      tmp.resolve("b.vocab").toString)
+    val art = Unigram.readVocab(tmp.resolve("b.vocab").toString,
+      preserveMarkers = true)
+    val (pieces, floatScaled) = (art.pieces, art.floatScaled)
     assert(floatScaled)
     // markers survive the parse, variants keep their own scores
     val pm = pieces.toMap
@@ -190,7 +191,7 @@ class ByteBpeSpec extends AnyFunSuite {
     // without boundary: the collapsed projection (r15 behavior) still
     // available — 'th' collapses to the optimistic −1 everywhere
     val flat = Unigram.encode(df, "text", "doc_id",
-      Unigram.readVocab(tmp.resolve("b.vocab").toString),
+      Unigram.readVocab(tmp.resolve("b.vocab").toString).pieces,
       unk = -10000000L).collect()(0)
     assert(flat.getString(1).contains("th"), flat.getString(1))
   }
@@ -341,7 +342,7 @@ class ByteBpeSpec extends AnyFunSuite {
     // a PARTIAL <0xNN> set does NOT engage fallback: those rows stay
     // literal text pieces (a code/hexdump corpus can learn them) and
     // the artifact parses exactly as it did pre-r17
-    val partial = Unigram.parseVocabArtifactFull(
+    val partial = Unigram.parseVocabArtifact(
       "▁\t-2.0\na\t-3.0\n<0x41>\t-4.0\n<0xFF>\t-4.5\n")
     assert(partial.byteScores.isEmpty)
     assert(partial.pieces.exists(_._1 == "<0x41>"), partial.pieces)
@@ -378,10 +379,10 @@ class ByteBpeSpec extends AnyFunSuite {
       .collect()(0).getAs[Long]("n_ug_tokens")
     assert(intToks == 3L)
     // and the scale flag itself
-    assert(graft.operators.Unigram.readVocabScaled(
-      tmp.resolve("f.vocab").toString)._2)
-    assert(!graft.operators.Unigram.readVocabScaled(
-      tmp.resolve("i.vocab").toString)._2)
+    assert(graft.operators.Unigram.readVocab(
+      tmp.resolve("f.vocab").toString).floatScaled)
+    assert(!graft.operators.Unigram.readVocab(
+      tmp.resolve("i.vocab").toString).floatScaled)
   }
 
   test("byte-bpe: merge replay is symbol-boundary-aware (r16): a pattern " +

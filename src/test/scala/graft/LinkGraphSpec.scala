@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{LinkGraph, TextOps}
+import graft.operators.{LinkGraph, Materialize, TextOps}
 
 /** htmlLinks resolution rules the q_html_links seeds don't isolate,
   * hostEdges edge semantics, and pageRank's closed-form behavior on
@@ -134,5 +134,80 @@ class LinkGraphSpec extends AnyFunSuite {
           s"trial $trial $k: engine=${got(k)} reference=${pr(k)}")
       }
     }
+  }
+
+  // ---- the DataFrame power iteration the RDD loop replaced, kept as
+  // the reference: three checkpointed loop-invariant frames, N as a
+  // broadcast one-row frame, and a join plan per round
+  private def refPageRank(edges: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int, damping: Double = 0.85): DataFrame = {
+    val e = Materialize.checkpoint(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    val nodes = Materialize.checkpoint(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+    val outDeg = Materialize.checkpoint(
+      e.groupBy("src").agg(count(lit(1)).as("out_deg")))
+    val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
+    var ranks = nodes.crossJoin(broadcast(nNodes))
+      .select(col("node"), round(lit(1.0) / col("n_nodes"), 9).as("rank"))
+    for (_ <- 1 to iterations) {
+      val contribs = e
+        .join(ranks, e("src") === ranks("node"))
+        .join(outDeg, "src")
+        .select(col("dst"), (col("rank") / col("out_deg")).as("contrib"))
+        .groupBy("dst").agg(sum(col("contrib")).as("mass"))
+      ranks = nodes
+        .join(contribs, nodes("node") === contribs("dst"), "left")
+        .crossJoin(broadcast(nNodes))
+        .select(col("node"),
+          round(lit(1.0 - damping) / col("n_nodes") +
+            lit(damping) * coalesce(col("mass"), lit(0.0)), 9).as("rank"))
+    }
+    ranks
+  }
+
+  private def seededEdges(seed: Long): Seq[(String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    // nodes n0..n(n-1); the upper quarter only receives (dangling), and
+    // a fifth of the edges repeat
+    val n = 30 + rnd.nextInt(20)
+    val edges = (0 until 4 * n).map(_ =>
+      (s"n${rnd.nextInt(3 * n / 4)}", s"n${rnd.nextInt(n)}"))
+      .filter { case (a, b) => a != b }
+    edges ++ rnd.shuffle(edges).take(edges.size / 5)
+  }
+
+  test("pageRank: ranks equal the DataFrame power iteration (dangling, duplicate and NULL endpoints)") {
+    val s = spark
+    import s.implicits._
+    val graphs = Seq(1L, 2L, 3L).map(seed => s"seed $seed" -> seededEdges(seed)) :+
+      ("null endpoints" -> (seededEdges(4L) ++
+        Seq[(String, String)](("n1", null), ("n1", null), (null, "n2"), (null, null))))
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "5")
+    for ((name, raw) <- graphs; session <- Seq(spark, wide); iterations <- Seq(1, 5)) {
+      val edges = session.createDataFrame(raw).toDF("src", "dst").repartition(3)
+      val want = refPageRank(edges, "src", "dst", iterations)
+      val got = LinkGraph.pageRank(edges, "src", "dst", iterations)
+      val tag = s"$name iterations=$iterations shuffle=${session.conf.get("spark.sql.shuffle.partitions")}"
+      assert(got.schema == want.schema, tag)
+      def ranks(df: DataFrame) = df.collect().map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
+      assert(ranks(got) == ranks(want), tag)
+    }
+    // integer node ids take the same path
+    val longEdges = seededEdges(5L).map { case (a, b) => (a.tail.toLong, b.tail.toLong) }
+      .toDF("src", "dst")
+    assert(LinkGraph.pageRank(longEdges, "src", "dst").collect().toSet ==
+      refPageRank(longEdges, "src", "dst", 5).collect().toSet)
+  }
+
+  test("pageRank: one job per round") {
+    val s = spark
+    import s.implicits._
+    val edges = seededEdges(6L).toDF("src", "dst")
+    val (ranks, jobs) = Jobs.of(spark)(LinkGraph.pageRank(edges, "src", "dst", 5).collect())
+    assert(ranks.nonEmpty)
+    assert(jobs.count(_.startsWith("pagerank: round")) == 5, jobs.mkString(", "))
+    assert(jobs.size <= 5 + 3, s"${jobs.size} jobs for 5 rounds: ${jobs.mkString(", ")}")
   }
 }

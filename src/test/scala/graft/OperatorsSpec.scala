@@ -1631,33 +1631,45 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("connected components: one job per round on a 64-node chain") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    val group = "cc-job-pin"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      val ccJobs = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          ccJobs.put(e.jobId, true); jobs.incrementAndGet()
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (!ccJobs.containsKey(e.jobId)) marker.countDown()
-    }
     val pairs = (1L until 64L).map(i => (i + 1, i)).toDF("a", "b")
+    val (cc, jobs) = Jobs.of(spark)(Dedup.connectedComponents(pairs, "a", "b"))
+    assert(jobs.size >= 1 && jobs.size <= 10, s"${jobs.size} jobs for a 64-node chain")
+    assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 64L).map(_ -> 1L).toMap)
+  }
+
+  test("connected components: a released round logs no unpersist WARN; only the last round stays cached") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("cc-unpersist", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("cannot be recomputed after unpersisting"))
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
+    val before = sc.getPersistentRDDs.keySet
     try {
-      sc.setJobGroup(group, "connected components over a chain")
-      val cc = try Dedup.connectedComponents(pairs, "a", "b") finally sc.clearJobGroup()
-      // the bus delivers events in order: once a later job's end is
-      // seen, every job of the call has been counted
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get >= 1 && jobs.get <= 10, s"${jobs.get} jobs for a 64-node chain")
-      assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-        (1L to 64L).map(_ -> 1L).toMap)
-    } finally sc.removeSparkListener(listener)
+      val pairs = (1L until 64L).map(i => (i + 1, i)).toDF("a", "b")
+      val (cc, jobs) = Jobs.of(spark)(Dedup.connectedComponents(pairs, "a", "b"))
+      assert(jobs.count(_.startsWith("cc: round")) >= 3, jobs.mkString(", "))
+      val held = sc.getPersistentRDDs.keySet -- before
+      assert(held.size <= 1, s"persistent RDDs left by the rounds: $held")
+      assert(cc.count() == 64L)
+      assert(warned.isEmpty, warned.toArray.mkString("\n"))
+    } finally {
+      root.removeAppender("cc-unpersist")
+      ctx.updateLoggers()
+      appender.stop()
+    }
   }
 
   test("z-order: bit interleave pins and spatial locality of the layout") {
@@ -3738,6 +3750,71 @@ class OperatorsSpec extends AnyFunSuite {
       "x", spark.range(1).select(array((0 to 5).map(_ => lit(1L)): _*).as("w")))
       .select("score").collect()
     assert(s5.forall(_.isNullAt(0)))
+  }
+
+  // ---- the DataFrame rounds the perceptron's treeAggregate replaced,
+  // kept as the reference: per round a broadcast cross join of the
+  // weights onto the grouped profiles, aggregated to a one-row frame
+  // and checkpointed
+  private def refPerceptronTrain(df: DataFrame, featuresCol: String,
+      labelCol: String, iters: Int, k: Int): Seq[Long] = {
+    val y = when(col(labelCol), 1L).otherwise(-1L)
+    val x = concat(array(lit(1L)), col(featuresCol).cast("array<long>"))
+    val feats = Materialize.checkpoint(df.select(y.as("y"), x.as("x"))
+      .groupBy(col("y"), col("x")).agg(count(lit(1)).as("n")))
+    var w: DataFrame = spark.range(1)
+      .select(array(Seq.fill(k + 1)(lit(0L)): _*).as("w"))
+    for (_ <- 1 to iters) {
+      val dot = aggregate(zip_with(col("w"), col("x"), _ * _), lit(0L), _ + _)
+      val contrib = when(col("y") * dot <= 0, col("y") * col("n")).otherwise(lit(0L))
+      w = Materialize.checkpoint(feats.crossJoin(broadcast(w))
+        .agg(array((0 to k).map(j =>
+          coalesce(first(col("w").getItem(j)) +
+            sum(contrib * col("x").getItem(j)), lit(0L))): _*).as("w")))
+    }
+    w.head().getSeq[Long](0)
+  }
+
+  test("perceptron: weights equal the DataFrame rounds (seeded, duplicates, empty, partitionings)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    // noisy linear rule over 3 small count features: few distinct
+    // profiles, so most rows repeat one
+    val base = (0 until 300).map { i =>
+      val f = Array.fill(3)(rnd.nextInt(6).toLong)
+      (i.toLong, f, 2 * f(0) - f(1) + f(2) - 4 + rnd.nextInt(3) - 1 > 0)
+    }
+    val rows = (base ++ base.take(40).map { case (i, f, l) => (i + 1000L, f, l) })
+      .toDF("id", "x", "label")
+    for (iters <- Seq(1, 20); parts <- Seq(1, 3, 7)) {
+      val df = rows.repartition(parts)
+      val tag = s"iters=$iters parts=$parts"
+      assert(Perceptron.train(df, "x", "label", iters, k = 3).head().getSeq[Long](0) ==
+        refPerceptronTrain(df, "x", "label", iters, k = 3), tag)
+      val empty = df.filter(col("id") < 0)
+      assert(Perceptron.train(empty, "x", "label", iters, k = 3).head().getSeq[Long](0) ==
+        refPerceptronTrain(empty, "x", "label", iters, k = 3), s"empty $tag")
+    }
+    // an overflowing update fails the round in both, never wraps
+    val huge = Seq((1L, Array(1L << 40, 1L << 40), true), (2L, Array(1L, 1L << 41), false))
+      .toDF("id", "x", "label")
+    def overflow(train: => Any): Boolean = {
+      val e = intercept[Exception](train)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
+    }
+    assert(overflow(refPerceptronTrain(huge, "x", "label", 3, k = 2)))
+    assert(overflow(Perceptron.train(huge, "x", "label", 3, k = 2)))
+  }
+
+  test("perceptron: training runs one job per round") {
+    import spark.implicits._
+    val rows = (0 until 60).map(i => (Array((i % 10).toLong, (i * 7 % 10).toLong), i % 10 > i * 7 % 10))
+      .toDF("x", "label")
+    val (w, jobs) = Jobs.of(spark)(Perceptron.train(rows, "x", "label", iters = 20, k = 2).head())
+    assert(w.getSeq[Long](0).length == 3)
+    assert(jobs.count(_.startsWith("perceptron: round")) == 20, jobs.mkString(", "))
+    assert(jobs.size <= 20 + 4, s"${jobs.size} jobs for 20 rounds: ${jobs.mkString(", ")}")
   }
 
   test("url_surt: edge shapes the gate seeds don't isolate (r12)") {

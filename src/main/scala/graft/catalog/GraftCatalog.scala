@@ -71,8 +71,6 @@ class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     load(name).filter(_.kind == "crawler")
       .getOrElse(throw new IllegalArgumentException(s"no crawler $name"))
 
-  def crawlerPrefix(name: String): String = crawlerDef(name).paths.head
-
   // ---- ALTER TABLE (managed): copy-on-write schema evolution, the
   // same rewrite stance as DELETE/UPDATE (reference lower.rs:71-107)
 

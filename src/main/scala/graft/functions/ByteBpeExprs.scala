@@ -338,16 +338,6 @@ object ByteBpeExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  case class UnicodeToBytes(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "graft_unicode_to_bytes"
-    override def nullSafeEval(a: Any): Any = u2bKernel(a.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.ByteBpeExprs.u2bKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   /** whole-text byte-level BPE encode against a fixed merge table — the
     * [[TextExprs.BpeEncode]] stance (reference-object merge arrays,
     * map-only inside WholeStageCodegen) over GPT-2 pre-tokens */
@@ -415,9 +405,6 @@ object ByteBpeExprs {
 
   def bytes_to_unicode(text: Column): Column =
     ColumnBridge.column(BytesToUnicode(ColumnBridge.expression(text)))
-
-  def unicode_to_bytes(text: Column): Column =
-    ColumnBridge.column(UnicodeToBytes(ColumnBridge.expression(text)))
 
   def byte_bpe_encode(text: Column, merges: Seq[(String, String)]): Column =
     ColumnBridge.column(ByteBpeEncode(ColumnBridge.expression(text), merges))

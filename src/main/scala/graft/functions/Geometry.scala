@@ -2166,10 +2166,6 @@ object Geo {
   }
   def stGeometryType(a: String): String = geometryType(parseWktCached(a))
   def stDimension(a: String): Int = dimension(parseWktCached(a))
-  def stLineInterpolateX(a: String, f: Double): Double =
-    lineInterpolatePoint(parseWktCached(a), f)._1
-  def stLineInterpolateY(a: String, f: Double): Double =
-    lineInterpolatePoint(parseWktCached(a), f)._2
   def stLineInterpolatePointWkt(a: String, f: Double): String = {
     val (x, y) = lineInterpolatePoint(parseWktCached(a), f)
     stPoint(x, y)

@@ -519,21 +519,6 @@ object VocabRegistry {
   def register(name: String, mapping: Map[String, String]): Unit =
     vocabs.put(name, mapping)
 
-  /** CSV with `key,value` rows (no header handling beyond skipping a
-    * literal "key,value" first line). */
-  def registerCsv(name: String, path: String): Unit = {
-    val src = scala.io.Source.fromFile(path)
-    try {
-      val entries = src.getLines()
-        .filterNot(l => l.trim.isEmpty || l.trim == "key,value")
-        .flatMap { l =>
-          val i = l.indexOf(',')
-          if (i < 0) None else Some(l.substring(0, i) -> l.substring(i + 1))
-        }.toMap
-      register(name, entries)
-    } finally src.close()
-  }
-
   def lookup(vocab: String, key: String): Option[String] =
     Option(vocabs.get(vocab)).flatMap(_.get(key))
 

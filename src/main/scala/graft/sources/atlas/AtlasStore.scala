@@ -60,10 +60,6 @@ object AtlasStore {
         s"atlas dataset '$n' not in store $root (have ${datasets.map(_.name).mkString(",")})"))
   }
 
-  def isAtlas(path: String): Boolean =
-    ByteStore.isDirectory(path) &&
-      ByteStore.exists(ByteStore.resolve(path, "atlas.json"))
-
   // --------------------------------------------------------- metadata
 
   /** observables for specs: metadata parses and chunk-file opens */
@@ -164,14 +160,6 @@ object AtlasStore {
   }
 
   // ---------------------------------------------------------- chunk io
-
-  private def dtypeWidth(dtype: String): Int = dtype match {
-    case "int8" => 1
-    case "int16" => 2
-    case "int32" | "float32" => 4
-    case "int64" | "float64" => 8
-    case other => throw new IllegalArgumentException(s"atlas dtype '$other' unsupported")
-  }
 
   private def chunkFile(root: String, ds: String, a: AtlasArray, cidx: Array[Int]): String =
     ByteStore.resolve(root, s"$ds/${a.name}/c" + cidx.mkString(".") + ".af")

@@ -90,8 +90,6 @@ object FlatBuf {
       val p = fieldPos(id)
       if (p == 0) None else Some(new Table(buf, p + buf.getInt(p)))
     }
-    /** inline struct: absolute position (0 if absent) */
-    def structPos(id: Int): Int = fieldPos(id)
     def vector(id: Int): Option[Vec] = {
       val p = fieldPos(id)
       if (p == 0) None else Some(new Vec(buf, p + buf.getInt(p)))
@@ -105,19 +103,6 @@ object FlatBuf {
     def tableAt(i: Int): Table = {
       val p = base + 4 * i; new Table(buf, p + buf.getInt(p))
     }
-    def strAt(i: Int): String = {
-      val p = base + 4 * i
-      val s = p + buf.getInt(p)
-      val len = buf.getInt(s)
-      val out = new Array[Byte](len)
-      val dup = buf.duplicate(); dup.position(s + 4); dup.get(out)
-      new String(out, java.nio.charset.StandardCharsets.UTF_8)
-    }
-    def structPosAt(i: Int, structSize: Int): Int = base + structSize * i
-    def u8At(i: Int): Int = buf.get(base + i) & 0xFF
-    def i32At(i: Int): Int = buf.getInt(base + 4 * i)
-    def i64At(i: Int): Long = buf.getLong(base + 8 * i)
-    def f64At(i: Int): Double = buf.getDouble(base + 8 * i)
     def bytes: Array[Byte] = {
       val out = new Array[Byte](length)
       val dup = buf.duplicate(); dup.position(base); dup.get(out)
@@ -200,18 +185,6 @@ object FlatBuf {
       put32(bytes.length)
       used
     }
-    def i32Vector(xs: Seq[Int]): Int = {
-      prepVec(4 * xs.length, 4)
-      xs.reverseIterator.foreach(put32)
-      put32(xs.length)
-      used
-    }
-    def i64Vector(xs: Seq[Long]): Int = {
-      prepVec(8 * xs.length, 8)
-      xs.reverseIterator.foreach(put64)
-      put32(xs.length)
-      used
-    }
 
     // ----- table under construction
     private var slots: List[(Int, Int)] = Nil // (slot id, field end-offset)
@@ -238,10 +211,6 @@ object FlatBuf {
       write(this)
       slots ::= (id -> used)
     }
-    /** raw little-endian struct field helpers for slotStruct bodies —
-      * remember: back-to-front, write the LAST struct member first */
-    def rawI64(v: Long): Unit = put64(v)
-    def rawI32(v: Int): Unit = put32(v)
     def rawBytes(b: Array[Byte]): Unit = {
       head -= b.length; System.arraycopy(b, 0, buf, head, b.length)
     }

@@ -17,7 +17,7 @@ import graft.GraftSession
   */
 object DumpFixtures {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.build("local[8]", 8)
+    val spark = GraftSession.build()
     val out = "src/test/resources/fixtures"
 
     graft.queries.QueriesFormats.zarrGridded(spark)

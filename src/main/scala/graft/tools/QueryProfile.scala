@@ -1,14 +1,15 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-
-import scala.collection.concurrent.TrieMap
+import graft.sql.Jobs
 
 /** Optimization-round instrument (guide §1): run one or more SparkEntry
-  * queries under a listener that records EVERY job's wall time, stage
-  * count, task count and shuffle bytes — the breakdown `Bench`'s single
-  * wall number hides for multi-action queries (iterative connected
-  * components, per-stage checkpoints, broadcast-round training loops).
+  * queries through the job ledger ([[graft.sql.Jobs]]) and print, per
+  * query, the formatted physical plan and then the jobs it ran: wall
+  * time, job/stage/task counts, shuffle and spill, the driver gap (wall
+  * minus the union of the job intervals) and every job of 20 ms or more
+  * with its label. That is the breakdown `Bench`'s single wall number
+  * hides for multi-action queries (iterative connected components,
+  * per-stage checkpoints, per-round training loops).
   *
   * Usage: runMain graft.tools.QueryProfile q_a[,q_b] [sfDir]
   * Env: SPARK_GRAFT_CPUS (default: the host's cores).
@@ -19,32 +20,6 @@ object QueryProfile {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.build()
 
-    final case class JobRec(desc: String, start: Long, var end: Long = 0L,
-      var stages: Int = 0, var tasks: Int = 0,
-      var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L)
-    val jobs = TrieMap.empty[Int, JobRec]
-    val stageToJob = TrieMap.empty[Int, Int]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.put(e.jobId, JobRec(desc, e.time))
-        e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.end = e.time)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        stageToJob.get(si.stageId).flatMap(jobs.get).foreach { r =>
-          r.stages += 1
-          r.tasks += si.numTasks
-          r.shuffleRead += si.taskMetrics.shuffleReadMetrics.totalBytesRead
-          r.shuffleWrite += si.taskMetrics.shuffleWriteMetrics.bytesWritten
-        }
-      }
-    })
-
     // warmup (JIT + codegen paths) so the first profiled query is honest
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -54,20 +29,18 @@ object QueryProfile {
 
     names.foreach { name =>
       graft.Bench.sweepCaches(spark)
-      jobs.clear(); stageToJob.clear()
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // a job whose end was not delivered has no duration: count it as
-      // incomplete and keep it out of jobSum
-      val (recs, incomplete) = jobs.toSeq.sortBy(_._1).partition(_._2.end > 0L)
-      val jobSum = recs.map { case (_, r) => (r.end - r.start) / 1e3 }.sum
-      println(f"===== $name%s wall=$wall%.3f s jobs=${recs.size + incomplete.size}%d incomplete=${incomplete.size}%d jobSum=$jobSum%.3f s (gap=${wall - jobSum}%.3f s driver/planning)")
-      recs.foreach { case (id, r) =>
-        val dur = (r.end - r.start) / 1e3
-        if (dur >= 0.02)
-          println(f"  job $id%3d ${dur}%7.3f s stages=${r.stages}%2d tasks=${r.tasks}%4d shufR=${r.shuffleRead / 1024}%8d KB shufW=${r.shuffleWrite / 1024}%8d KB ${r.desc.take(80)}%s")
+      val ((df, wall), jobs) = Jobs.of(spark) {
+        val t0 = System.nanoTime()
+        val df = graft.SparkEntry.queries(name)(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        (df, (System.nanoTime() - t0) / 1e9)
+      }
+      println(s"===== $name =====")
+      df.explain("formatted")
+      val s = Jobs.summary(jobs, wall)
+      println(f"wall=$wall%.3f s jobs=${s.jobs}%d incomplete=${s.incomplete}%d stages=${s.stages}%d tasks=${s.tasks}%d shufW=${s.shuffleWriteMb}%.1f MB spill=${s.spillMb}%.1f MB busy=${s.busyS}%.3f s gap=${s.driverGapS}%.3f s (wall - union of job intervals)")
+      jobs.filter(_.seconds >= 0.02).foreach { j =>
+        println(f"  job ${j.id}%3d ${j.seconds}%7.3f s stages=${j.stages}%2d tasks=${j.tasks}%4d shufR=${j.shuffleRead / 1024}%8d KB shufW=${j.shuffleWrite / 1024}%8d KB spill=${j.spill / 1024}%6d KB ${j.label.replace('\n', ' ').take(80)}%s")
       }
     }
     spark.stop()

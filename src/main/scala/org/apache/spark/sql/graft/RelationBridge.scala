@@ -3,10 +3,13 @@
  * internalCreateDataFrame. Used by table-format sources (Delta) to plan
  * a log-defined file set as ONE parquet relation whose partition pruning
  * runs against an in-memory manifest instead of a per-partition Union
- * fan, and by RDD operators to hand back Catalyst rows as a frame and to
- * release their per-round state (the private[spark] unpersistRDD). */
+ * fan, by RDD operators to hand back Catalyst rows as a frame and to
+ * release their per-round state (the private[spark] unpersistRDD), and by
+ * the job ledger to drain the listener bus (the private[spark]
+ * listenerBus). */
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -32,6 +35,11 @@ object RelationBridge {
     * which is the point for a finished round's state: nothing reads it
     * again once the next round is checkpointed. */
   def release(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** Returns once every event posted to `sc`'s listener bus so far has
+    * reached its listeners; a `TimeoutException` after `timeoutMs`. */
+  def drainListeners(sc: SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 
   /** One parquet `HadoopFsRelation` over an explicit [[FileIndex]].
     * Output columns are `dataSchema ++ partitionSchema` (partition values

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{LinkGraph, Materialize, TextOps}
+import graft.sql.Jobs
 
 /** htmlLinks resolution rules the q_html_links seeds don't isolate,
   * hostEdges edge semantics, and pageRank's closed-form behavior on
@@ -205,7 +206,8 @@ class LinkGraphSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val edges = seededEdges(6L).toDF("src", "dst")
-    val (ranks, jobs) = Jobs.of(spark)(LinkGraph.pageRank(edges, "src", "dst", 5).collect())
+    val (ranks, ran) = Jobs.of(spark)(LinkGraph.pageRank(edges, "src", "dst", 5).collect())
+    val jobs = ran.map(_.label)
     assert(ranks.nonEmpty)
     assert(jobs.count(_.startsWith("pagerank: round")) == 5, jobs.mkString(", "))
     assert(jobs.size <= 5 + 3, s"${jobs.size} jobs for 5 rounds: ${jobs.mkString(", ")}")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
+import graft.sql.Jobs
 
 class OperatorsSpec extends AnyFunSuite {
 
@@ -1659,7 +1660,8 @@ class OperatorsSpec extends AnyFunSuite {
     val before = sc.getPersistentRDDs.keySet
     try {
       val pairs = (1L until 64L).map(i => (i + 1, i)).toDF("a", "b")
-      val (cc, jobs) = Jobs.of(spark)(Dedup.connectedComponents(pairs, "a", "b"))
+      val (cc, ran) = Jobs.of(spark)(Dedup.connectedComponents(pairs, "a", "b"))
+      val jobs = ran.map(_.label)
       assert(jobs.count(_.startsWith("cc: round")) >= 3, jobs.mkString(", "))
       val held = sc.getPersistentRDDs.keySet -- before
       assert(held.size <= 1, s"persistent RDDs left by the rounds: $held")
@@ -2470,40 +2472,13 @@ class OperatorsSpec extends AnyFunSuite {
     finally if (ckDir.isEmpty) spark.sparkContext.setCheckpointDir(null)
   }
 
-  /** the jobs `body` runs, counted by a listener on a job group of its
-    * own; a marker job started after `body` settles the asynchronous
-    * listener bus, which delivers events in order */
-  private def jobsOf(body: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val settled = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(g) if g == group + "-marker" => settled.countDown()
-          case _ => ()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(settled.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not settle")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("curate report: runs compile's plan once, at most compile's jobs + 2 (sf0.01)") {
     val seed = graft.queries.QueriesData.fineWebSeed(spark, sf.replace("sf0.001", "sf0.01"))
     val spec = graft.queries.QueriesData.fineWebSpec
-    val compiled = jobsOf(graft.dsl.CuratePipeline.compile(seed, spec)
-      .write.format("noop").mode("overwrite").save())
-    val reported = jobsOf(graft.dsl.CuratePipeline.report(seed, spec).collect())
+    val compiled = Jobs.of(spark)(graft.dsl.CuratePipeline.compile(seed, spec)
+      .write.format("noop").mode("overwrite").save())._2.size
+    val reported = Jobs.of(spark)(
+      graft.dsl.CuratePipeline.report(seed, spec).collect())._2.size
     assert(compiled > 0)
     assert(reported <= compiled + 2,
       s"report ran $reported jobs; compile and one action over it ran $compiled")
@@ -2511,35 +2486,18 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("curate: a stage's input checkpoint runs under its label before compile returns") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
     def checkLabel(label: String)(compile: => DataFrame): DataFrame = {
-      val labelled = new java.util.concurrent.ConcurrentHashMap[Int, Long]() // job -> start
-      val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()     // job -> end
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-              .contains(label)) labelled.put(e.jobId, e.time)
-        override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
-      }
-      val sc = spark.sparkContext
-      sc.addSparkListener(listener)
-      try {
+      val ((out, returned), jobs) = Jobs.of(spark) {
         val out = compile
-        val returned = System.currentTimeMillis()
-        // the listener bus is asynchronous — settle
-        var tries = 0
-        def runs = labelled.asScala.toMap.map { case (j, t) => (j, t, ends.asScala.get(j)) }
-        while ((runs.isEmpty || runs.exists(_._3.isEmpty)) && tries < 50) {
-          Thread.sleep(100); tries += 1
-        }
-        assert(runs.nonEmpty, s"no job ran as '$label'")
-        runs.foreach { case (job, start, end) =>
-          assert(end.exists(e => start <= returned && e <= returned),
-            s"job $job as '$label' ran [$start, $end]; compile returned at $returned")
-        }
-        out
-      } finally sc.removeSparkListener(listener)
+        (out, System.currentTimeMillis())
+      }
+      val runs = jobs.filter(_.label == label)
+      assert(runs.nonEmpty, s"no job ran as '$label'")
+      runs.foreach { j =>
+        assert(j.complete && j.start <= returned && j.end <= returned,
+          s"job ${j.id} as '$label' ran [${j.start}, ${j.end}]; compile returned at $returned")
+      }
+      out
     }
     // an in-memory, exchange-free input: only a job of the boundary's
     // own can materialize it under the label
@@ -3811,7 +3769,8 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = (0 until 60).map(i => (Array((i % 10).toLong, (i * 7 % 10).toLong), i % 10 > i * 7 % 10))
       .toDF("x", "label")
-    val (w, jobs) = Jobs.of(spark)(Perceptron.train(rows, "x", "label", iters = 20, k = 2).head())
+    val (w, ran) = Jobs.of(spark)(Perceptron.train(rows, "x", "label", iters = 20, k = 2).head())
+    val jobs = ran.map(_.label)
     assert(w.getSeq[Long](0).length == 3)
     assert(jobs.count(_.startsWith("perceptron: round")) == 20, jobs.mkString(", "))
     assert(jobs.size <= 20 + 4, s"${jobs.size} jobs for 20 rounds: ${jobs.mkString(", ")}")

@@ -5,8 +5,11 @@ Usage: merge_bench.py out.json sweep1.json sweep2.json [...]
 
 Per-query time = min over sweeps where the query succeeded (null = that
 sweep failed it; a query failed in EVERY sweep stays null and is listed
-in "failed"). "runs" concatenates every sweep's samples. Total = sum
-of merged per-query times.
+in "failed"). "runs" concatenates every sweep's samples. "layers"
+carries each query's layers (jobs, stages, tasks, shuffle, spill,
+driver gap) from the sweep whose time is kept; a query without a kept
+time, or whose kept sweep has no layers, has none. Total = sum of
+merged per-query times.
 """
 import json
 import sys
@@ -24,12 +27,16 @@ def main() -> None:
             if k not in names:
                 names.append(k)
 
-    queries, runs, failed = {}, {}, []
+    queries, runs, layers, failed = {}, {}, {}, []
     for k in names:
-        ts = [s["queries"][k] for s in sweeps
-              if s["queries"].get(k) is not None]
-        queries[k] = min(ts) if ts else None
-        if not ts:
+        kept = [s for s in sweeps if s["queries"].get(k) is not None]
+        if kept:
+            best = min(kept, key=lambda s: s["queries"][k])
+            queries[k] = best["queries"][k]
+            if k in best.get("layers", {}):
+                layers[k] = best["layers"][k]
+        else:
+            queries[k] = None
             failed.append(k)
         samples = []
         for s in sweeps:
@@ -42,6 +49,7 @@ def main() -> None:
         "unit": "sec",
         "queries": queries,
         "runs": runs,
+        "layers": layers,
         "failed": failed,
     }
 
